@@ -18,7 +18,9 @@ import org.apache.spark.sql.SparkSession
  * - SPARK_GRAFT_EXTRA_PLANDIR=<dir> additionally writes
  *   <dir>/<query>.txt with `.explain("formatted")` for each query.
  *
- * Prints one JSON line: {"queries_min":{...},"queries_samples":{...}}.
+ * Prints one JSON line: {"queries_min":{...},"queries_samples":{...}}. A
+ * failed sample is null, and so is the min of a query with no successful
+ * sample.
  */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -70,18 +72,19 @@ object BenchExtra {
         val dt = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(null)
-        if (ok) dt else -1.0
+        if (ok) Some(dt) else None
       }
       name -> samples
     }
-    def f(d: Double): String = "%.4f".format(d)
-    val mins = results.map { case (k, v) => "\"" + k + "\":" + f(v.min) }
+    def f(d: Option[Double]): String = d.fold("null")("%.4f".format(_))
+    val best = results.map { case (k, v) => k -> v.flatten.minOption }
+    val mins = best.map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
     val all = results.map { case (k, v) =>
       "\"" + k + "\":" + v.map(f).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val total = results.map(_._2.min).filter(_ >= 0).sum
-    println(s"""{"metric":"extra","total_min":${f(total)},""" +
+    val total = best.flatMap(_._2).sum
+    println(s"""{"metric":"extra","total_min":${"%.4f".format(total)},""" +
       s""""queries_min":$mins,"queries_samples":$all,"sf":"$sfDir",""" +
       s""""noop":$useNoop,"reps":$reps}""")
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.classify
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.build.ProbeDb
@@ -252,16 +252,26 @@ object Classify {
 
   /** `.rep` analog: per-target report (matches, unique reads, lca reads) —
     * GanonClassify.cpp:834-863. One shuffle (the groupBy). */
-  def report(results: Dataset[ReadResult]): DataFrame = {
-    val spark = results.sparkSession
-    val all = allMatches(results)
-      .groupBy("target").agg(count(lit(1)).as("matches"))
-    val one = oneAssignments(results)
-      .groupBy("target").agg(
-        sum(when(col("unique"), 1L).otherwise(0L)).as("unique_reads"),
-        sum(when(col("unique"), 0L).otherwise(1L)).as("lca_reads"))
-    all.join(one, Seq("target"), "full_outer").na.fill(0L,
-      Seq("matches", "unique_reads", "lca_reads"))
+  def report(results: Dataset[ReadResult]): DataFrame =
+    repBy(results.toDF())
+
+  /** The `.rep` aggregation, grouped by `keys` and target: each read
+    * explodes into one row per match plus one for its assignment (which
+    * may be an LCA node that is none of its matches), all counted by ONE
+    * groupBy. */
+  private def repBy(results: DataFrame, keys: Column*): DataFrame = {
+    def row(target: Column, m: Column, u: Column, l: Column) =
+      struct(target.as("target"), m.cast("long").as("m"),
+        u.cast("long").as("u"), l.cast("long").as("l"))
+    val hits = transform(col("matches"),
+      x => row(x.getField("target"), lit(1), lit(0), lit(0)))
+    val own = filter(
+      array(row(col("assignment"), lit(0), col("unique"), !col("unique"))),
+      x => x.getField("target").isNotNull)
+    results.select(keys :+ explode(concat(hits, own)).as("e"): _*)
+      .groupBy(keys :+ col("e.target").as("target"): _*)
+      .agg(sum("e.m").as("matches"), sum("e.u").as("unique_reads"),
+        sum("e.l").as("lca_reads"))
   }
 
   /** Unclassified reads (`.unc` analog) — anti-join shape. */
@@ -397,19 +407,8 @@ object Classify {
   /** Per-sample `.rep`: (sample, target, matches, unique_reads, lca_reads)
     * — the reference's per-prefix report rows in one aggregation
     * (GanonClassify.cpp:834-863). */
-  def reportBySample(results: DataFrame): DataFrame = {
-    val all = results
-      .select(col("sample"), explode(col("matches")).as("m"))
-      .groupBy(col("sample"), col("m.target").as("target"))
-      .agg(count(lit(1)).as("matches"))
-    val one = results.filter(col("assignment").isNotNull)
-      .groupBy(col("sample"), col("assignment").as("target"))
-      .agg(
-        sum(when(col("unique"), 1L).otherwise(0L)).as("unique_reads"),
-        sum(when(col("unique"), 0L).otherwise(1L)).as("lca_reads"))
-    all.join(one, Seq("sample", "target"), "full_outer")
-      .na.fill(0L, Seq("matches", "unique_reads", "lca_reads"))
-  }
+  def reportBySample(results: DataFrame): DataFrame =
+    repBy(results, col("sample"))
 
   /** Per-sample 18-column `.sta` (prefix = the sample value), one
     * aggregation over all samples. */

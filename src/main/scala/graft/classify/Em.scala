@@ -2,6 +2,7 @@ package graft.classify
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * EM reassignment of multi-match reads (capability of ganon reassign,
@@ -11,23 +12,26 @@ import org.apache.spark.sql.functions._
  * until the L1 prob change < threshold or maxIter (default 10,
  * src/ganon/config.py:770-776).
  *
- * Scale shape: the multi-match relation is grouped ONCE into one row per
- * read carrying its candidate array (bounded by matches-per-read), with
- * targets INTERNED to dense int ids in the same pass. Each EM iteration is
- * then a map-only argmax over those rows (probs broadcast as a flat
- * Array[Double] indexed by target id — 8 B/target instead of a boxed
- * string-keyed map, an array load instead of a hash probe per candidate)
- * followed by a per-target count that picks its shape by |targets|:
- * below 64k a plain groupBy+collect (map-side partial agg, trivial
- * collect, fastest at reference-test scale); above it a SHUFFLE-FREE
- * depth-2 treeAggregate of dense per-partition Array[Long]s, so the
- * driver merges a few pre-combined arrays instead of boxing |targets|
- * Rows per iteration (the 10^7-target ceiling the unconditional
- * groupBy+collect had). Nothing rescans or reshuffles the full match
- * relation inside the loop; at 10^7 targets the per-iteration broadcast
- * is ~80 MB, not the ~1 GB a string map would cost. Measured at 10^6
- * targets / 2x10^6 multi-match reads, local[8]: 3 EM iterations in
- * ~28 s wall including the one-time grouping pass (tools/EmScale).
+ * Scale shape: `.all` is grouped by read ONCE into per-read candidate
+ * arrays (single-match reads included; bounded by matches-per-read). One
+ * aggregation over that grouping, one row per target, yields the sorted
+ * target dictionary, the unique-match counts and the `.all` rows per
+ * target. The grouped rows are interned into compact primitive rows
+ * (target -> dense int id by binary search in the sorted dictionary, so id
+ * order == target order) and cached; the grouping's cache is released once
+ * they exist. Each iteration is then ONE map-side job with no exchange:
+ * argmax per read against the broadcast probs (a flat Array[Double], 8 B
+ * per target), picks folded into a dense per-partition Array[Long]. Below
+ * 64k targets the driver merges one array per partition (rdd.aggregate);
+ * above it a depth-2 treeAggregate merges a few pre-combined arrays
+ * instead of one per partition (the 10^7-target shape). Unique reads sit in
+ * the same rows and always pick their one target, so the fold counts
+ * unique + reassigned reads directly. After convergence the assignment is
+ * materialized once, with the probs the last iteration used, as one eager
+ * local checkpoint; both caches and every broadcast are released before
+ * `reassign` returns. Measured with tools/EmScale at 10^6 targets and
+ * 2x10^6 reads, local[8] on a 4-CPU box: 3 iterations in ~32 s wall,
+ * grouping pass and final materialization included.
  * Tie-break: the reference keeps the FIRST listed match (reassign.py:
  * 227-241 — np.argmax returns the first max index). When the input
  * carries Classify.allMatches' `match_order` column (the read's bin
@@ -36,140 +40,103 @@ import org.apache.spark.sql.functions._
  */
 object Em {
 
+  /** One read's candidates, targets interned to dictionary ids. */
+  private final case class Cands(readId: String, ts: Array[Int],
+      cs: Array[Long], os: Array[Long])
+
+  /** One EM run: the final assignment plus, per dictionary target, its
+    * unique-match reads, `.all` rows and finally assigned reads. */
+  private final case class Run(one: DataFrame, targets: Array[String],
+      unique: Array[Long], matches: Array[Long], assigned: Array[Long])
+
+  /** Index of the read's argmax candidate under `p`: score = count * p,
+    * ties by first-listed order, then id asc (== target asc). */
+  private def pick(c: Cands, p: Array[Double]): Int = {
+    var best = 0
+    var bs = c.cs(0) * p(c.ts(0)); var bo = c.os(0)
+    var i = 1
+    while (i < c.ts.length) {
+      val t = c.ts(i); val o = c.os(i)
+      val s = c.cs(i) * p(t)
+      if (s > bs || (s == bs && (o < bo || (o == bo && t < c.ts(best))))) {
+        best = i; bs = s; bo = o
+      }
+      i += 1
+    }
+    best
+  }
+
   /**
    * @param all the `.all` relation (read_id, target, kmer_count); read_ids
    *            with exactly one match get weight-1 priors
-   * @return (read_id, target, kmer_count: Long) final assignment per read
+   * @return (read_id, target, kmer_count: Long) final assignment per read,
+   *         materialized (a local checkpoint: no recompute on reuse)
    */
   def reassign(spark: SparkSession, all: DataFrame, maxIter: Int = 10,
-      threshold: Double = 0.001): DataFrame = {
+      threshold: Double = 0.001): DataFrame =
+    run(spark, all, maxIter, threshold).one
+
+  private def run(spark: SparkSession, all: DataFrame, maxIter: Int,
+      threshold: Double): Run = {
     import spark.implicits._
+    val sc = spark.sparkContext
     // first-listed order: present when the caller fed allMatches output
     val ordCol =
       if (all.columns.contains("match_order")) col("match_order").cast("long")
       else lit(0L)
-    val matches = all
-      .select(col("read_id"), col("target"),
-        col("kmer_count").cast("long").as("kmer_count"), ordCol.as("ord"))
+    val grouped = all.groupBy("read_id")
+      .agg(collect_list(struct(col("target"),
+        col("kmer_count").cast("long").as("kmer_count"), ordCol.as("ord")))
+        .as("ms"))
       .persist()
-    val nMatches = matches.groupBy("read_id")
-      .agg(count(lit(1)).as("n_m"))
-    val withN = matches.join(broadcast(nMatches.filter(col("n_m") === 1)),
-      Seq("read_id"), "left")
-    val uniques = withN.filter(col("n_m").isNotNull)
-      .select("read_id", "target", "kmer_count")
-    // intern targets to dense ints, SORTED so tid order == lexicographic
-    // order (the tie-break below compares tids where it used to compare
-    // target strings). |targets| rows collected once — loop-invariant.
-    val allTargets = matches.select("target").distinct()
-      .collect().map(_.getString(0)).sorted
-    val n = allTargets.length
-    val tIdxB = spark.sparkContext.broadcast(
-      allTargets.iterator.zipWithIndex.toMap)
-    val namesB = spark.sparkContext.broadcast(allTargets)
+    // the loop-invariant per-target facts, |targets| rows collected once;
+    // sorted so dictionary id order == target order (the tie-break)
+    val perTarget = grouped
+      .select((size(col("ms")) === 1).cast("long").as("u"),
+        explode(col("ms.target")).as("target"))
+      .groupBy("target").agg(sum("u").as("u"), count(lit(1)).as("m"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1)
+    val targets = perTarget.map(_._1)
+    val unique = perTarget.map(_._2)
+    val n = targets.length
+    val namesB = sc.broadcast(targets)
 
-    // group each multi-match read's candidates ONCE, interning the target
-    // in the same pass; the loop never touches strings again
-    val intern = udf((t: String) => tIdxB.value(t))
-    val multiReads = withN.filter(col("n_m").isNull)
-      .groupBy("read_id")
-      .agg(collect_list(struct(intern(col("target")).as("tid"),
-        col("kmer_count"), col("ord"))).as("ms"))
-      .persist()
-    // primitive-array twin of multiReads for the E-step count jobs: the
-    // loop only needs per-target COUNTS, so it scans these compact rows
-    // map-side (no per-iteration UDF encode, no groupBy exchange) and the
-    // full (read_id, pick) assignment materializes exactly once after
-    // convergence — with the same probs the final iteration used
-    val compactRdd = multiReads.select(col("ms")).rdd.map { r =>
-      val ms = r.getSeq[Row](0)
+    val compact = grouped.rdd.map { r =>
+      val names = namesB.value.asInstanceOf[Array[AnyRef]]
+      val ms = r.getSeq[Row](1)
       val m = ms.length
       val ts = new Array[Int](m); val cs = new Array[Long](m)
       val os = new Array[Long](m)
       var i = 0
       while (i < m) {
         val e = ms(i)
-        ts(i) = e.getInt(0); cs(i) = e.getLong(1); os(i) = e.getLong(2)
+        ts(i) = java.util.Arrays.binarySearch(names, e.getString(0))
+        cs(i) = e.getLong(1); os(i) = e.getLong(2)
         i += 1
       }
-      (ts, cs, os)
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Cands(r.getString(0), ts, cs, os)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
 
-    // init probs from unique counts (+1 smoothing so zero-unique targets
-    // can still attract reads, as reassign.py's eps does)
-    // unique-match counts are loop-invariant: collect once (|targets| rows)
-    val uniqueCounts = new Array[Long](n)
-    uniques.groupBy("target").agg(count(lit(1)).as("c"))
-      .collect().foreach(r =>
-        uniqueCounts(tIdxB.value(r.getString(0))) = r.getLong(1))
     def normalized(totals: Array[Double]): Array[Double] = {
       val z = totals.sum
       totals.map(_ / z)
     }
-    var probs = normalized(uniqueCounts.map(_ + 1.0))
-
-    // argmax over the read's candidate array given the broadcast prob
-    // array; ties by first-listed order, then tid asc (== target asc by
-    // the sorted interning above)
-    def assign(pB: org.apache.spark.broadcast.Broadcast[Array[Double]])
-        : DataFrame = {
-      val pick = udf((ms: Seq[Row]) => {
-        val p = pB.value
-        var bt = -1; var bc = 0L; var bs = -1.0
-        var bo = Long.MaxValue
-        ms.foreach { r =>
-          val t = r.getInt(0); val c = r.getLong(1); val o = r.getLong(2)
-          val s = c * p(t)
-          val better = s > bs || (s == bs &&
-            (o < bo || (o == bo && (bt < 0 || t < bt))))
-          if (better) { bs = s; bt = t; bc = c; bo = o }
-        }
-        (bt, bc)
-      })
-      multiReads
-        .select(col("read_id"), pick(col("ms")).as("pick"))
-        .select(col("read_id"), col("pick._1").as("tid"),
-          col("pick._2").as("kmer_count"))
-    }
-
-    var assigned: DataFrame = null
-    // probs the most recent EXECUTED iteration assigned with — the final
-    // materialized assignment must use these, not the post-update probs
+    // +1 smoothing so zero-unique targets can still attract reads, as
+    // reassign.py's eps does
+    var probs = normalized(unique.map(_ + 1.0))
+    // probs the most recent EXECUTED iteration assigned with, and its
+    // per-target counts — the final assignment uses exactly these
     var probsUsed: Array[Double] = null
+    var assigned = unique
     var iter = 0
     var diff = Double.MaxValue
     while (iter < maxIter && diff > threshold) {
-      val pB = spark.sparkContext.broadcast(probs)
+      val pB = sc.broadcast(probs)
       probsUsed = probs
-      // per-target counts of this iteration's argmax assignment, computed
-      // DIRECTLY over the compact candidate rows: one map-side job per
-      // iteration folding picks into a dense Array[Long] — no per-read
-      // assignment row is encoded, shuffled or collected inside the loop
-      // (the old shape ran the pick UDF into a DataFrame and then a
-      // groupBy+collect per iteration; the assignment itself is only
-      // needed ONCE, after convergence). Two merge regimes, same answer:
-      // - SMALL |targets| (< 64k): rdd.aggregate — the driver merges
-      //   numPartitions dense arrays of n longs (tiny), one job, no
-      //   shuffle stage at all.
-      // - LARGE |targets|: treeAggregate depth 2, so the driver merges a
-      //   handful of pre-combined arrays instead of one per partition
-      //   (the 10^7-target shape; see tools/EmScale).
-      val seqOp = (a0: Array[Long],
-          row: (Array[Int], Array[Long], Array[Long])) => {
+      val seqOp = (a0: Array[Long], c: Cands) => {
         val a = if (a0 == null) new Array[Long](n) else a0
-        val p = pB.value
-        val (ts, cs, os) = row
-        var bt = -1; var bs = -1.0; var bo = Long.MaxValue
-        var i = 0
-        while (i < ts.length) {
-          val t = ts(i); val o = os(i)
-          val s = cs(i) * p(t)
-          val better = s > bs || (s == bs &&
-            (o < bo || (o == bo && (bt < 0 || t < bt))))
-          if (better) { bs = s; bt = t; bo = o }
-          i += 1
-        }
-        if (bt >= 0) a(bt) += 1
+        a(c.ts(pick(c, pB.value))) += 1
         a
       }
       val combOp = (a: Array[Long], b: Array[Long]) =>
@@ -181,13 +148,13 @@ object Em {
           a
         }
       val agg =
-        if (n < 65536) compactRdd.aggregate(null: Array[Long])(seqOp, combOp)
-        else compactRdd.treeAggregate(null: Array[Long])(seqOp, combOp,
+        if (n < 65536) compact.aggregate(null: Array[Long])(seqOp, combOp)
+        else compact.treeAggregate(null: Array[Long])(seqOp, combOp,
           depth = 2)
-      val counts = if (agg == null) new Array[Long](n) else agg
       pB.destroy()
-      val newProbs = normalized(Array.tabulate(n)(t =>
-        counts(t) + uniqueCounts(t) + 1.0))
+      if (iter == 0) grouped.unpersist() // the compact rows hold it now
+      assigned = if (agg == null) new Array[Long](n) else agg
+      val newProbs = normalized(assigned.map(_ + 1.0))
       // L1 distance between consecutive normalized prob vectors — one pass
       diff = {
         var s = 0.0; var t = 0
@@ -197,56 +164,40 @@ object Em {
       probs = newProbs
       iter += 1
     }
-    // materialize the assignment ONCE, with the probs the last executed
-    // iteration used — identical rows to materializing every iteration
-    var liveB: org.apache.spark.broadcast.Broadcast[Array[Double]] = null
-    if (iter > 0) {
-      liveB = spark.sparkContext.broadcast(probsUsed)
-      assigned = assign(liveB)
-    }
-    // restore string targets on the way out (one map-side lookup per
-    // ASSIGNED read, not per candidate)
-    val unintern = udf((t: Int) => namesB.value(t))
-    if (assigned != null) assigned = assigned
-      .select(col("read_id"), unintern(col("tid")).as("target"),
-        col("kmer_count"))
-    // sever the final iteration's broadcast dependency before destroying
-    // it (otherwise one prob-map broadcast leaks per reassign() call on a
-    // long-lived session): eager localCheckpoint materializes the
-    // assignment, so no recompute can ever dereference the destroyed
-    // value. The intern/name broadcasts are severed by the same
-    // checkpoint; `uniques` never referenced them.
-    if (assigned != null) assigned = assigned.localCheckpoint(true)
-    if (liveB != null) { liveB.destroy(); liveB = null }
-    val result = uniques.unionByName(
-      if (assigned == null)
-        uniques.limit(0)
-      else assigned)
-    compactRdd.unpersist()
-    multiReads.unpersist(); matches.unpersist()
-    tIdxB.destroy(); namesB.destroy()
-    result
+    grouped.unpersist() // still cached only when no iteration ran
+
+    // no iteration ran (maxIter < 1): only the unique reads are assigned
+    val pB = if (probsUsed == null) null else sc.broadcast(probsUsed)
+    val one = compact.mapPartitions { it =>
+      val names = namesB.value
+      val p = if (pB == null) null else pB.value
+      it.filter(c => p != null || c.ts.length == 1).map { c =>
+        val i = if (c.ts.length == 1) 0 else pick(c, p)
+        (c.readId, names(c.ts(i)), c.cs(i))
+      }
+    }.toDF("read_id", "target", "kmer_count")
+      // eager: the broadcasts and the compact cache are released below,
+      // and nothing may recompute through them afterwards
+      .localCheckpoint(true)
+    compact.unpersist()
+    if (pB != null) pB.destroy()
+    namesB.destroy()
+    Run(one, targets, unique, perTarget.map(_._3), assigned)
   }
 
   /** EM `.one` plus the rewritten `.rep` (reference reassign.py:180-224:
     * after EM the report's lca column becomes reassigned − unique). Returns
     * (one, rep) where rep = (target, unique_reads, lca_reads, matches):
     * unique_reads from single-match reads, lca_reads = EM-reassigned multis,
-    * matches = total `.all` rows per target. */
+    * matches = total `.all` rows per target. The rep comes from the EM
+    * run's own per-target counts: no further pass over `.all`. */
   def reassignWithRep(spark: SparkSession, all: DataFrame, maxIter: Int = 10,
       threshold: Double = 0.001): (DataFrame, DataFrame) = {
-    val one = reassign(spark, all, maxIter, threshold).persist()
-    val nM = all.groupBy("read_id").agg(count(lit(1)).as("n_m"))
-    val uniqueReads = all.join(broadcast(nM.filter(col("n_m") === 1)), Seq("read_id"))
-      .groupBy("target").agg(count(lit(1)).as("unique_reads"))
-    val assignedAll = one.groupBy("target").agg(count(lit(1)).as("assigned"))
-    val matches = all.groupBy("target").agg(count(lit(1)).as("matches"))
-    val rep = matches
-      .join(assignedAll, Seq("target"), "left")
-      .join(uniqueReads, Seq("target"), "left")
-      .na.fill(0L, Seq("assigned", "unique_reads"))
-      .withColumn("lca_reads", col("assigned") - col("unique_reads"))
-      .select("target", "unique_reads", "lca_reads", "matches")
-    (one, rep)
+    import spark.implicits._
+    val r = run(spark, all, maxIter, threshold)
+    val rep = spark.sparkContext.parallelize(r.targets.indices.map(t =>
+        (r.targets(t), r.unique(t), r.assigned(t) - r.unique(t), r.matches(t))))
+      .toDF("target", "unique_reads", "lca_reads", "matches")
+    (r.one, rep)
   }
 }

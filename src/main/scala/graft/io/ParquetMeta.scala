@@ -155,9 +155,12 @@ private[graft] object ParquetMeta {
     } finally w.close()
   }
 
+  /** The one manifest row at `path`: a file, or a legacy directory whose
+    * part-files hold exactly one row in total (empty parts are fine). */
   def readManifestRow(conf: Configuration, path: Path): ManifestRow = {
     val gs = readGroups(conf, path)
-    require(gs.length == 1, s"manifest at $path holds ${gs.length} rows")
+    require(gs.length == 1,
+      s"manifest at $path holds ${gs.length} rows, expected exactly 1")
     val g = gs.head
     // index-based list access tolerates legacy writers' inner field names
     val sgIdx = g.getType.getFieldIndex("shard_gens")

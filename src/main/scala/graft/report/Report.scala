@@ -18,28 +18,26 @@ object Report {
   /**
    * @param counts   (node, direct_count) — e.g. per-target read counts
    * @param lineage  (node, lineage: Array[String]) root-first, inclusive
-   * @return (node, rank_depth, direct, cumulative, cum_perc)
+   * @return (node, rank_depth, direct, cumulative, cum_perc); `cum_perc`
+   *         is over every counts row, those without a lineage included
    */
   def tree(counts: DataFrame, lineage: DataFrame): DataFrame = {
-    val joined = counts.join(broadcast(lineage), Seq("node"))
-    // sum over zero rows is SQL null: floor at 1 so an empty counts frame
-    // yields an empty tree instead of an unboxing NPE
-    val total = math.max(1L, counts
-      .agg(coalesce(sum(col("direct_count")), lit(0L))).first().getLong(0))
-      .toDouble
-    val cum = joined
-      .select(col("direct_count"), explode(col("lineage")).as("anc"))
+    // one aggregation: each counts row meets every ancestor; its own
+    // (last) lineage entry carries `direct`, and a row with no lineage
+    // survives posexplode_outer as a null ancestor that only feeds the total
+    val self = col("pos").isNull || col("pos") === size(col("lineage")) - 1
+    counts.join(broadcast(lineage), Seq("node"), "left")
+      .select(col("direct_count"), col("lineage"),
+        posexplode_outer(col("lineage")).as(Seq("pos", "anc")))
       .groupBy(col("anc").as("node"))
-      .agg(sum(col("direct_count")).as("cumulative"))
-    val depth = lineage.select(col("node"),
-      (size(col("lineage")) - 1).as("rank_depth"))
-    cum
-      .join(counts, Seq("node"), "left")
-      .na.fill(0L, Seq("direct_count"))
-      .join(broadcast(depth), Seq("node"), "left")
-      .withColumn("cum_perc", round(col("cumulative") / lit(total) * 100.0, 5))
-      .select(col("node"), col("rank_depth"),
-        col("direct_count").as("direct"), col("cumulative"), col("cum_perc"))
+      .agg(min(col("pos")).as("rank_depth"),
+        sum(when(self, col("direct_count")).otherwise(0L)).as("direct"),
+        sum(col("direct_count")).as("cumulative"))
+      // |nodes| rows: the total is a sum over all of them, lineage-less
+      // group included; floored at 1 so an all-zero total divides cleanly
+      .withColumn("cum_perc", round(col("cumulative") /
+        greatest(sum(col("direct")).over(), lit(1L)) * 100.0, 5))
+      .filter(col("node").isNotNull)
       .orderBy(col("rank_depth").asc, col("cumulative").desc, col("node").asc)
   }
 

@@ -50,15 +50,22 @@ class ParquetMetaSpec extends AnyFunSuite {
     assert(b.toSeq == bins)
   }
 
-  test("ParquetMeta reads legacy directory-shaped spark-written metadata") {
+  /** `rows` copies of the manifest row as the old df.write path made it. */
+  private def legacyManifest(rows: Int) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pm").toString
-    Seq((row.version, row.generation, row.layout, row.k, row.w, row.seed,
-      row.maxFp, row.hllP, row.minContentLen, row.sizingMode, row.bitsPerBin,
-      row.numHashes, row.maxHashesBin, row.numBins, row.shardGens, row.ibf))
+    Seq.fill(rows)((row.version, row.generation, row.layout, row.k, row.w,
+      row.seed, row.maxFp, row.hllP, row.minContentLen, row.sizingMode,
+      row.bitsPerBin, row.numHashes, row.maxHashesBin, row.numBins,
+      row.shardGens, row.ibf))
       .toDF("version", "generation", "layout", "k", "w", "seed", "max_fp",
         "hll_p", "min_content_len", "sizing_mode", "bits_per_bin",
         "num_hashes", "max_hashes_bin", "num_bins", "shard_gens", "ibf")
+  }
+
+  test("ParquetMeta reads legacy directory-shaped spark-written metadata") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_pm").toString
+    legacyManifest(1)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest.parquet")
     bins.toDF("target", "n_hashes", "base", "split")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/bins.parquet")
@@ -78,5 +85,33 @@ class ParquetMetaSpec extends AnyFunSuite {
     ParquetMeta.writeManifestRow(conf, p,
       row.copy(layout = "flat", shardGens = Array.empty[Int]))
     assert(ParquetMeta.readManifestRow(conf, p).shardGens.isEmpty)
+  }
+
+  test("a multi-part legacy manifest reads when it holds exactly one row") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pm").toString
+    def parts(d: String) = new java.io.File(d).listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    // one row in the first part, an empty second part beside it
+    legacyManifest(1).coalesce(1).write.parquet(s"$dir/one.parquet")
+    legacyManifest(0).coalesce(1).write.parquet(s"$dir/empty.parquet")
+    val emptyPart = parts(s"$dir/empty.parquet").head
+    assert(emptyPart.renameTo(
+      new java.io.File(s"$dir/one.parquet/part-99999-empty.parquet")))
+    assert(parts(s"$dir/one.parquet").length == 2)
+    val r = ParquetMeta.readManifestRow(conf, new Path(s"$dir/one.parquet"))
+    assert(r.copy(shardGens = null, ibf = null) ==
+      row.copy(shardGens = null, ibf = null))
+    assert(r.shardGens.toSeq == row.shardGens.toSeq)
+    // zero rows in total, or two rows over two parts: a clear error
+    legacyManifest(0).coalesce(1).write.parquet(s"$dir/zero.parquet")
+    assert(parts(s"$dir/zero.parquet").length == 1)
+    val none = intercept[IllegalArgumentException](
+      ParquetMeta.readManifestRow(conf, new Path(s"$dir/zero.parquet")))
+    assert(none.getMessage.contains("holds 0 rows"))
+    legacyManifest(2).repartition(2).write.parquet(s"$dir/two.parquet")
+    assert(parts(s"$dir/two.parquet").length == 2)
+    val two = intercept[IllegalArgumentException](
+      ParquetMeta.readManifestRow(conf, new Path(s"$dir/two.parquet")))
+    assert(two.getMessage.contains("holds 2 rows"))
   }
 }

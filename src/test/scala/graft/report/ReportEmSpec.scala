@@ -3,7 +3,7 @@ package graft.report
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.classify.Em
+import graft.classify.{Classify, Em, MatchRow, ReadResult}
 import graft.spark.SparkTestSession
 
 class ReportEmSpec extends AnyFunSuite {
@@ -134,5 +134,47 @@ class ReportEmSpec extends AnyFunSuite {
     // conservation: every read appears exactly once in .one
     assert(one.select("read_id").distinct().count() == one.count())
     assert(one.count() == 4)
+  }
+
+  test(".rep counts an LCA node that is none of the read's matches") {
+    // m1 matches a/x and a/y and resolves to their LCA `a`: `a` gets the
+    // read's lca count with zero matches, in both .rep shapes
+    val res = Seq(
+      ReadResult("m1", 10, Array(MatchRow("a/x", 5), MatchRow("a/y", 5)),
+        "a", unique = false, skipped = false),
+      ReadResult("u1", 10, Array(MatchRow("a/x", 7)), "a/x", unique = true,
+        skipped = false),
+      ReadResult("n1", 10, Array.empty, null, unique = false,
+        skipped = false)).toDS()
+    val want = Map("a" -> (0L, 0L, 1L), "a/x" -> (2L, 1L, 0L),
+      "a/y" -> (1L, 0L, 0L))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      r.getAs[String]("target") -> (r.getAs[Long]("matches"),
+        r.getAs[Long]("unique_reads"), r.getAs[Long]("lca_reads"))).toMap
+    assert(rows(Classify.report(res)) == want)
+    val bySample = Classify.reportBySample(res.toDF()
+      .withColumn("sample", when(col("read_id") === "u1", "s2").otherwise("s1")))
+    assert(bySample.filter(col("sample") === "s1").count() == 3)
+    assert(rows(bySample.filter(col("sample") === "s1")) ==
+      Map("a" -> (0L, 0L, 1L), "a/x" -> (1L, 0L, 0L), "a/y" -> (1L, 0L, 0L)))
+    assert(rows(bySample.filter(col("sample") === "s2")) ==
+      Map("a/x" -> (1L, 1L, 0L)))
+  }
+
+  test("report.tree: a counts node missing from lineage still counts in the total") {
+    val counts = Seq(("a/x", 3L), ("ghost", 1L)).toDF("node", "direct_count")
+    val lineage = Seq(("root", Array("root")), ("a", Array("root", "a")),
+      ("a/x", Array("root", "a", "a/x"))).toDF("node", "lineage")
+    val tre = Report.tree(counts, lineage).collect()
+      .map(r => r.getString(0) -> (r.getInt(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4))).toMap
+    assert(tre == Map("root" -> (0, 0L, 3L, 75.0), "a" -> (1, 0L, 3L, 75.0),
+      "a/x" -> (2, 3L, 3L, 75.0)))
+  }
+
+  test("report.tree: empty counts give an empty tree") {
+    val counts = Seq.empty[(String, Long)].toDF("node", "direct_count")
+    val lineage = Seq(("root", Array("root"))).toDF("node", "lineage")
+    assert(Report.tree(counts, lineage).collect().isEmpty)
   }
 }
