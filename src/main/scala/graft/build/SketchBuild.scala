@@ -1,11 +1,16 @@
 package graft.build
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.core.Hashing
 import graft.core.sketch.{Bloom, InterleavedBloom}
-import graft.spark.GraftFunctions
+import graft.spark.{GraftFunctions, Rows}
 
 /** Shingling + filter-sizing parameters (role of ganon's IBFConfig,
   * src/utils/include/utils/IBFConfig.hpp:5-41). `sizingMode` mirrors the
@@ -412,6 +417,51 @@ final class LazyTwoLevelDb(
   def residentBytes: Long = resident.get()
 }
 
+/** A split target's row cut into per-(row x spanned 64-bin group) hash
+  * subsets, array<struct<grp, hs>>, computed map-side so the one shuffle
+  * carries exactly the per-row-deduped hashes. Reads the row's arrays in
+  * place: no encoders, and it stays inside whole-stage codegen. */
+private[build] case class RouteSlices(hs: Expression, base: Expression,
+    split: Expression) extends TernaryExpression {
+  override def first: Expression = hs
+  override def second: Expression = base
+  override def third: Expression = split
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("grp", IntegerType, nullable = false),
+    StructField("hs", ArrayType(LongType, containsNull = false), nullable = false))),
+    containsNull = false)
+
+  override protected def nullSafeEval(h: Any, b: Any, s: Any): Any =
+    RouteSlices.compute(h.asInstanceOf[ArrayData], b.asInstanceOf[Int], s.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (h, b, s) => s"graft.build.RouteSlices.compute($h, $b, $s)")
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): RouteSlices =
+    copy(hs = newFirst, base = newSecond, split = newThird)
+}
+
+private[build] object RouteSlices {
+  /** Static entry, called from generated code. */
+  def compute(a: ArrayData, base: Int, split: Int): ArrayData =
+    if (a.numElements() == 0) new GenericArrayData(Array.empty[Any])
+    else if (split == 1) new GenericArrayData(Array[Any](InternalRow(base / 64, a)))
+    else {
+      val byGrp = scala.collection.mutable.LinkedHashMap
+        .empty[Int, scala.collection.mutable.ArrayBuilder.ofLong]
+      var i = 0
+      while (i < a.numElements()) {
+        val bin = base + BinLayout.routeBin(a.getLong(i), split)
+        byGrp.getOrElseUpdate(bin / 64,
+          new scala.collection.mutable.ArrayBuilder.ofLong) += a.getLong(i)
+        i += 1
+      }
+      new GenericArrayData(byGrp.iterator.map { case (g, hb) =>
+        InternalRow(g, UnsafeArrayData.fromPrimitiveArray(hb.result())) }.toArray[Any])
+    }
+}
+
 /**
  * Distributed build (Spark shape of ganon-build's two thread pools,
  * src/ganon-build/GanonBuild.cpp:752-921):
@@ -448,6 +498,12 @@ object SketchBuild {
     base.select(col(targetCol).as("target"),
       GraftFunctions.shingles(col(contentCol), p.k, p.w, p.seed).as("hs"))
   }
+
+  /** Pass-1 rows (target, n_hashes), sorted by target. */
+  private def cardinalityRows(cards: DataFrame): Seq[(String, Long)] =
+    Rows.collect(cards.select(col("target").cast("string"), col("n_hashes")))(r =>
+      (r.getUTF8String(0).toString, r.getLong(1)))
+      .sortBy(_._1).toSeq
 
   /** Pass-1 result: (target, n_hashes estimate). */
   def targetCardinalities(df: DataFrame, targetCol: String, contentCol: String,
@@ -566,7 +622,7 @@ object SketchBuild {
         tag) {
       targetCardinalitiesHashed(hashed, p)
     }
-    val cards = cardsDf.as[(String, Long)].collect().sortBy(_._1).toSeq
+    val cards = cardinalityRows(cardsDf)
     val (thePlan, layout) = plan(cards, p)
 
     // coarse at a LOOSER fp than the fine bins (see coarseSizing): at 0.05
@@ -613,10 +669,11 @@ object SketchBuild {
     val (cards, thePlan, layout, binsDf, cleanup) =
       planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
         twoLevel, persistShingles)
-    val shardRows = binsDf.collect().map { r =>
-      (r.getInt(0), r.getAs[Array[Byte]]("shard"),
-        if (twoLevel) r.getAs[Array[Byte]]("coarse") else null)
-    }
+    // a null shard marks a group that never received a non-empty slice
+    val shardRows = Rows.collect(binsDf) { r =>
+      (r.getInt(0), if (r.isNullAt(1)) null else r.getBinary(1),
+        if (twoLevel) r.getBinary(2) else null)
+    }.filter(_._2 != null)
     cleanup()
     (cards, thePlan, layout, shardRows)
   }
@@ -682,7 +739,7 @@ object SketchBuild {
       .select(col("grp"), col("shard"), col("coarse"))
       .as[(Int, Array[Byte], Array[Byte])]
       .mapPartitions { iter =>
-        iter.map { case (g, blob, coarseBlob) =>
+        iter.filter(_._2 != null).map { case (g, blob, coarseBlob) =>
           val full = InterleavedBloom.fromBytes(blob)
           val nLocal = math.min(64, numBins - g * 64)
           val windowed = new InterleavedBloom(nLocal, full.bitsPerBin,
@@ -718,7 +775,8 @@ object SketchBuild {
 
   /** The routed shard aggregation over the (target, hs) projection for the
     * given bin-map entries (target, base, split). Returns one row per
-    * touched 64-bin group. */
+    * 64-bin group fed any row; the shard is null when every slice it got
+    * was empty. */
   private def shardPass(spark: SparkSession, hashed: DataFrame,
       thePlan: IbfPlan,
       entries: Seq[(String, Int, Int)], numGroups: Int,
@@ -732,47 +790,29 @@ object SketchBuild {
     // SPLIT-FREE layouts (every target fits one technical bin — the common
     // case whenever maxHashesBin covers the largest target): a row's whole
     // hash set lands in the single group base/64, so routing is a pure
-    // column function — no per-row UDF invoke, tuple allocation or
-    // generic explode on the build hot path (guide §4: built-ins over
-    // closures). Split layouts keep the per-hash routing UDF below;
-    // either path feeds IbfShardAgg, which re-routes per hash anyway.
+    // column function — no per-row tuple allocation or generic explode on
+    // the build hot path (guide §4: built-ins over closures). Split
+    // layouts route per hash with [[RouteSlices]]; either path feeds
+    // IbfShardOp, which re-routes per hash anyway.
     // NOTE: no row-level empty-hs filter here — a predicate on `hs` gets
     // pushed through the shingle projection by substitution and re-runs
     // the kernel per row (verified in the physical plan); empty slices
-    // are instead ignored by IbfShardAgg and never-fed groups drop via
-    // the null-shard filter after the aggregation.
+    // are instead ignored by IbfShardOp and never-fed groups come out
+    // with a null shard.
     val anySplit = entries.exists(_._3 > 1)
     val routed =
       if (!anySplit)
         hashed.join(layoutDf, Seq("target"))
           .select(shiftright(col("base"), 6).as("grp"), col("base"),
             col("split"), col("hs"))
-      else {
-        // per-(row x spanned-group) hash subsets, computed map-side so the
-        // one shuffle carries exactly the per-row-deduped hashes
-        val route = udf((hs: Array[Long], base: Int, split: Int) => {
-          if (hs == null || hs.isEmpty) Array.empty[(Int, Array[Long])]
-          else if (split == 1) Array((base / 64, hs))
-          else {
-            val byGrp = scala.collection.mutable.LinkedHashMap
-              .empty[Int, scala.collection.mutable.ArrayBuilder.ofLong]
-            var i = 0
-            while (i < hs.length) {
-              val bin = base + BinLayout.routeBin(hs(i), split)
-              byGrp.getOrElseUpdate(bin / 64,
-                new scala.collection.mutable.ArrayBuilder.ofLong) += hs(i)
-              i += 1
-            }
-            byGrp.iterator.map { case (g, b) => (g, b.result()) }.toArray
-          }
-        })
-        hashed
-          .join(layoutDf, Seq("target"))
-          .select(col("base"), col("split"),
-            explode(route(col("hs"), col("base"), col("split"))).as("r"))
-          .select(col("r._1").as("grp"), col("base"), col("split"),
-            col("r._2").as("hs"))
-      }
+      else
+        hashed.join(layoutDf, Seq("target"))
+          .select(col("base"), col("split"), explode(GraftColumnBridge.column(
+            RouteSlices(GraftColumnBridge.expression(col("hs")),
+              GraftColumnBridge.expression(col("base")),
+              GraftColumnBridge.expression(col("split"))))).as("r"))
+          .select(col("r.grp").as("grp"), col("base"), col("split"),
+            col("r.hs").as("hs"))
     // enough groups -> exchange-free complete aggregation (one task per
     // group, zero partial blobs); few groups -> map-side partials are
     // cheap (numGroups x shardBytes per task) and keep input parallelism
@@ -790,10 +830,10 @@ object SketchBuild {
           .as("coarse"))
        else Nil)
     // a null shard marks a group that never received a non-empty slice
-    // (all its targets' content empty/filtered): drop it, preserving the
-    // untouched-group semantics (NoBlobGen sentinel / implicit empty)
+    // (all its targets' content empty/filtered): every consumer skips it,
+    // preserving the untouched-group semantics (NoBlobGen sentinel /
+    // implicit empty) without a filter stage of its own
     pre.groupBy("grp").agg(aggCols.head, aggCols.tail: _*)
-      .filter(col("shard").isNotNull)
   }
 
   /**
@@ -825,8 +865,7 @@ object SketchBuild {
     // pass 1 on the delta only
     val addCards =
       if (addDf == null) Seq.empty[(String, Long)]
-      else targetCardinalities(addDf, targetCol, contentCol, p)
-        .as[(String, Long)].collect().sortBy(_._1).toSeq
+      else cardinalityRows(targetCardinalities(addDf, targetCol, contentCol, p))
     val (existingAdds, newAdds) =
       addCards.partition(c => db.targetIndex.contains(c._1))
     require(existingAdds.forall(c => !removeSet.contains(c._1)) &&
@@ -894,7 +933,8 @@ object SketchBuild {
       val touched = shardPass(spark,
         hashedProjection(addDf, targetCol, contentCol, p),
         db.plan, entries, layout.numGroups)
-        .collect().map(r => (r.getInt(0), r.getAs[Array[Byte]]("shard")))
+        .collect().filter(!_.isNullAt(1))
+        .map(r => (r.getInt(0), r.getAs[Array[Byte]]("shard")))
       touched.foreach { case (g, blob) =>
         val shard = InterleavedBloom.fromBytes(blob)
         var p2 = 0L
@@ -1048,7 +1088,7 @@ object SketchBuild {
           .as[(Int, Array[Byte], Array[Byte])]
           .mapPartitions { iter =>
             val masks = maskB.value
-            iter.map { case (g, blob, coarseBlob) =>
+            iter.filter(_._2 != null).map { case (g, blob, coarseBlob) =>
               val delta = InterleavedBloom.fromBytes(blob)
               val nLocal = math.min(64, numBinsNew - g * 64)
               // <=64-bin shards always carry bitsPerBin words, so widening

@@ -1,7 +1,10 @@
 package graft.classify
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.build.ProbeDb
 import graft.core.{Lca, MathFns}
@@ -250,28 +253,74 @@ object Classify {
         col("unique"), col("n_hashes"))
   }
 
-  /** `.rep` analog: per-target report (matches, unique reads, lca reads) —
-    * GanonClassify.cpp:834-863. One shuffle (the groupBy). */
+  /** `.rep` analog: per-target report (target, matches, unique_reads,
+    * lca_reads) — GanonClassify.cpp:834-863. */
   def report(results: Dataset[ReadResult]): DataFrame =
-    repBy(results.toDF())
+    repBy(results.toDF(), None)
 
-  /** The `.rep` aggregation, grouped by `keys` and target: each read
-    * explodes into one row per match plus one for its assignment (which
-    * may be an LCA node that is none of its matches), all counted by ONE
-    * groupBy. */
-  private def repBy(results: DataFrame, keys: Column*): DataFrame = {
-    def row(target: Column, m: Column, u: Column, l: Column) =
-      struct(target.as("target"), m.cast("long").as("m"),
-        u.cast("long").as("u"), l.cast("long").as("l"))
-    val hits = transform(col("matches"),
-      x => row(x.getField("target"), lit(1), lit(0), lit(0)))
-    val own = filter(
-      array(row(col("assignment"), lit(0), col("unique"), !col("unique"))),
-      x => x.getField("target").isNotNull)
-    results.select(keys :+ explode(concat(hits, own)).as("e"): _*)
-      .groupBy(keys :+ col("e.target").as("target"): _*)
-      .agg(sum("e.m").as("matches"), sum("e.u").as("unique_reads"),
-        sum("e.l").as("lca_reads"))
+  /** The `.rep` counts, per (`key` value, target): each read counts once
+    * for every match and once, as unique or lca, for its assignment (which
+    * may be an LCA node that is none of its matches). A per-partition hash
+    * map folds the result rows as they come out of the plan; its entries
+    * cross one exchange as a single record per reduce partition of flat
+    * key and count arrays (a tuple per target would be serialized one by
+    * one). No query plan of its own to compile, and the result stays
+    * lazy. */
+  private def repBy(results: DataFrame, key: Option[String]): DataFrame = {
+    val s = results.schema
+    val (iKey, iMatches) = (key.map(s.fieldIndex).getOrElse(-1), s.fieldIndex("matches"))
+    val (iAssign, iUnique) = (s.fieldIndex("assignment"), s.fieldIndex("unique"))
+    val rows = results.queryExecution.toRdd
+    val nOut = math.max(1, rows.getNumPartitions)
+    // (matches, unique_reads, lca_reads) of one (key, target)
+    def counts(acc: java.util.HashMap[(String, String), Array[Long]], k: String,
+        target: String): Array[Long] = {
+      var a = acc.get((k, target))
+      if (a == null) { a = new Array[Long](3); acc.put((k, target), a) }
+      a
+    }
+    val perTarget = rows.mapPartitions { it =>
+      val acc = new java.util.HashMap[(String, String), Array[Long]]()
+      it.foreach { r =>
+        val k = if (iKey < 0 || r.isNullAt(iKey)) null else r.getUTF8String(iKey).toString
+        val ms = r.getArray(iMatches)
+        var i = 0
+        while (i < ms.numElements()) {
+          counts(acc, k, ms.getStruct(i, 2).getUTF8String(0).toString)(0) += 1
+          i += 1
+        }
+        if (!r.isNullAt(iAssign))
+          counts(acc, k, r.getUTF8String(iAssign).toString)(
+            if (r.getBoolean(iUnique)) 1 else 2) += 1
+      }
+      val ks = Array.fill(nOut)(scala.collection.mutable.ArrayBuffer.empty[String])
+      val ts = Array.fill(nOut)(scala.collection.mutable.ArrayBuffer.empty[String])
+      val cs = Array.fill(nOut)(new scala.collection.mutable.ArrayBuilder.ofLong)
+      acc.forEach { (kt, a) =>
+        val p = java.lang.Math.floorMod(kt.hashCode, nOut)
+        ks(p) += kt._1; ts(p) += kt._2; cs(p) ++= a
+      }
+      Iterator.tabulate(nOut)(p => (p, (ks(p).toArray, ts(p).toArray, cs(p).result())))
+    }.partitionBy(new org.apache.spark.HashPartitioner(nOut))
+      .mapPartitions { parts =>
+        val acc = new java.util.HashMap[(String, String), Array[Long]]()
+        parts.foreach { case (_, (ks, ts, cs)) =>
+          var i = 0
+          while (i < ks.length) {
+            val a = counts(acc, ks(i), ts(i))
+            a(0) += cs(3 * i); a(1) += cs(3 * i + 1); a(2) += cs(3 * i + 2)
+            i += 1
+          }
+        }
+        acc.entrySet.iterator.asScala.map { e =>
+          val ((k, t), a) = (e.getKey, e.getValue)
+          if (iKey < 0) Row(t, a(0), a(1), a(2)) else Row(k, t, a(0), a(1), a(2))
+        }
+      }
+    results.sparkSession.createDataFrame(perTarget, StructType(
+      key.map(StructField(_, StringType)).toSeq ++ Seq(
+        StructField("target", StringType), StructField("matches", LongType),
+        StructField("unique_reads", LongType), StructField("lca_reads", LongType))))
   }
 
   /** Unclassified reads (`.unc` analog) — anti-join shape. */
@@ -280,19 +329,42 @@ object Classify {
       .select("read_id")
 
   /** `.sta` analog (GanonClassify.cpp:1130-1218): one-row run statistics.
-    * Single aggregation over the per-read results — no extra pass. */
+    * One fold per partition over the result rows as they come out of the
+    * plan; the partials meet in one task. Lazy, like the rows it counts. */
   def stats(results: Dataset[ReadResult]): DataFrame = {
-    def zsum(c: org.apache.spark.sql.Column) = coalesce(sum(c), lit(0L))
-    results.toDF().agg(
-      count(lit(1)).as("seqs_processed"),
-      zsum(when(col("assignment").isNotNull, 1L).otherwise(0L)).as("seqs_classified"),
-      zsum(when(col("unique"), 1L).otherwise(0L)).as("seqs_unique"),
-      zsum(when(col("assignment").isNotNull && !col("unique"), 1L).otherwise(0L))
-        .as("seqs_multi"),
-      zsum(when(col("skipped"), 1L).otherwise(0L)).as("seqs_skipped"),
-      coalesce(sum(size(col("matches"))).cast("long"), lit(0L)).as("total_matches"),
-      zsum(col("n_hashes").cast("long")).as("total_hashes"),
-      coalesce(round(avg(size(col("matches"))), 4), lit(0.0)).as("avg_matches_per_seq"))
+    val s = results.schema
+    val Seq(iMatches, iAssign, iUnique, iSkipped, iHashes) =
+      Seq("matches", "assignment", "unique", "skipped", "n_hashes").map(s.fieldIndex)
+    // processed, classified, unique, multi, skipped, matches, hashes
+    val partials = results.queryExecution.toRdd.mapPartitions { rows =>
+      val a = new Array[Long](7)
+      rows.foreach { r =>
+        val classified = !r.isNullAt(iAssign)
+        val unique = r.getBoolean(iUnique)
+        a(0) += 1
+        if (classified) a(1) += 1
+        if (unique) a(2) += 1
+        if (classified && !unique) a(3) += 1
+        if (r.getBoolean(iSkipped)) a(4) += 1
+        a(5) += r.getArray(iMatches).numElements()
+        a(6) += r.getInt(iHashes)
+      }
+      Iterator.single(a)
+    }
+    val row = partials.repartition(1).mapPartitions { it =>
+      val t = new Array[Long](7)
+      it.foreach(a => (0 until 7).foreach(i => t(i) += a(i)))
+      // avg(size(matches)) rounded half-up to 4 places, 0.0 over no rows
+      val avg = if (t(0) == 0) 0.0 else java.math.BigDecimal
+        .valueOf(t(5).toDouble / t(0)).setScale(4, java.math.RoundingMode.HALF_UP)
+        .doubleValue
+      Iterator.single(Row(t(0), t(1), t(2), t(3), t(4), t(5), t(6), avg))
+    }
+    results.sparkSession.createDataFrame(row, StructType(
+      Seq("seqs_processed", "seqs_classified", "seqs_unique", "seqs_multi",
+        "seqs_skipped", "total_matches", "total_hashes")
+        .map(StructField(_, LongType, nullable = false)) :+
+        StructField("avg_matches_per_seq", DoubleType, nullable = false)))
   }
 
   // sums over ZERO rows are SQL null — coalesce to 0 so an empty input
@@ -408,7 +480,7 @@ object Classify {
     * — the reference's per-prefix report rows in one aggregation
     * (GanonClassify.cpp:834-863). */
   def reportBySample(results: DataFrame): DataFrame =
-    repBy(results, col("sample"))
+    repBy(results, Some("sample"))
 
   /** Per-sample 18-column `.sta` (prefix = the sample value), one
     * aggregation over all samples. */

@@ -1,6 +1,8 @@
 package graft.classify
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -13,13 +15,16 @@ import org.apache.spark.storage.StorageLevel
  * src/ganon/config.py:770-776).
  *
  * Scale shape: `.all` is grouped by read ONCE into per-read candidate
- * arrays (single-match reads included; bounded by matches-per-read). One
- * aggregation over that grouping, one row per target, yields the sorted
- * target dictionary, the unique-match counts and the `.all` rows per
- * target. The grouped rows are interned into compact primitive rows
- * (target -> dense int id by binary search in the sorted dictionary, so id
- * order == target order) and cached; the grouping's cache is released once
- * they exist. Each iteration is then ONE map-side job with no exchange:
+ * arrays (single-match reads included; bounded by matches-per-read): one
+ * exchange by read_id, then a hash map per partition over the rows copied
+ * straight out of the plan. Everything after runs on RDDs, so EM compiles
+ * one small query plan. One sorted run of targets per partition, merged
+ * pairwise, yields the sorted target dictionary, the unique-match counts
+ * and the `.all` rows per target. The grouped rows are interned into
+ * compact primitive rows (target -> dense int id by binary search in the
+ * sorted dictionary, so id order == target order) and cached; the
+ * grouping's cache is released once they exist. Each iteration is then
+ * ONE map-side job with no exchange:
  * argmax per read against the broadcast probs (a flat Array[Double], 8 B
  * per target), picks folded into a dense per-partition Array[Long]. Below
  * 64k targets the driver merges one array per partition (rdd.aggregate);
@@ -39,6 +44,41 @@ import org.apache.spark.storage.StorageLevel
  * (score desc, target asc).
  */
 object Em {
+
+  /** One read's candidates as grouped, targets by name. */
+  private final case class Named(readId: String, names: Array[String],
+      cs: Array[Long], os: Array[Long])
+
+  private final class Builder {
+    val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    val cs = new scala.collection.mutable.ArrayBuilder.ofLong
+    val os = new scala.collection.mutable.ArrayBuilder.ofLong
+  }
+
+  /** Targets in sorted order with their unique-read and `.all` row counts. */
+  private final case class TargetRun(targets: Array[String],
+      unique: Array[Long], matches: Array[Long])
+
+  private object TargetRun {
+    /** The union of two runs, counts of a shared target summed. */
+    def merge(a: TargetRun, b: TargetRun): TargetRun = {
+      val n = a.targets.length + b.targets.length
+      val ts = new Array[String](n)
+      val us = new Array[Long](n); val ms = new Array[Long](n)
+      var i = 0; var j = 0; var k = 0
+      while (i < a.targets.length || j < b.targets.length) {
+        val c =
+          if (j == b.targets.length) -1
+          else if (i == a.targets.length) 1
+          else a.targets(i).compareTo(b.targets(j))
+        if (c <= 0) { ts(k) = a.targets(i); us(k) = a.unique(i); ms(k) = a.matches(i); i += 1 }
+        else { ts(k) = b.targets(j); us(k) = b.unique(j); ms(k) = b.matches(j); j += 1 }
+        if (c == 0) { us(k) += b.unique(j); ms(k) += b.matches(j); j += 1 }
+        k += 1
+      }
+      TargetRun(ts.take(k), us.take(k), ms.take(k))
+    }
+  }
 
   /** One read's candidates, targets interned to dictionary ids. */
   private final case class Cands(readId: String, ts: Array[Int],
@@ -84,38 +124,57 @@ object Em {
     val ordCol =
       if (all.columns.contains("match_order")) col("match_order").cast("long")
       else lit(0L)
-    val grouped = all.groupBy("read_id")
-      .agg(collect_list(struct(col("target"),
-        col("kmer_count").cast("long").as("kmer_count"), ordCol.as("ord")))
-        .as("ms"))
-      .persist()
-    // the loop-invariant per-target facts, |targets| rows collected once;
-    // sorted so dictionary id order == target order (the tie-break)
-    val perTarget = grouped
-      .select((size(col("ms")) === 1).cast("long").as("u"),
-        explode(col("ms.target")).as("target"))
-      .groupBy("target").agg(sum("u").as("u"), count(lit(1)).as("m"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    val targets = perTarget.map(_._1)
-    val unique = perTarget.map(_._2)
+    // one exchange brings each read's rows together; the rows are read as
+    // they come out of the plan (no row decoder) and grouped in a hash map
+    // per partition, so EM compiles one small query plan and runs every
+    // later pass on RDDs
+    val grouped = all
+      .select(col("read_id").cast("string"), col("target").cast("string"),
+        col("kmer_count").cast("long"), ordCol)
+      .repartition(col("read_id"))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val byRead = new java.util.LinkedHashMap[String, Builder]()
+        rows.foreach { r => // the plan reuses its row object: copy out
+          val id = if (r.isNullAt(0)) null else r.getUTF8String(0).toString
+          var b = byRead.get(id)
+          if (b == null) { b = new Builder; byRead.put(id, b) }
+          b.names += r.getUTF8String(1).toString
+          b.cs += r.getLong(2); b.os += r.getLong(3)
+        }
+        byRead.entrySet.iterator.asScala.map { e =>
+          val b = e.getValue
+          Named(e.getKey, b.names.toArray, b.cs.result(), b.os.result())
+        }
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+    // the loop-invariant per-target facts, |targets| entries: each
+    // partition's targets sorted, with their unique-read and `.all` row
+    // counts, merged pairwise as sorted runs. Sorted so dictionary id
+    // order == target order (the tie-break)
+    val perTarget = grouped.mapPartitions { it =>
+      val acc = new java.util.HashMap[String, Array[Long]]()
+      it.foreach { c =>
+        val u = if (c.names.length == 1) 1L else 0L
+        c.names.foreach { t =>
+          var a = acc.get(t)
+          if (a == null) { a = new Array[Long](2); acc.put(t, a) }
+          a(0) += u; a(1) += 1
+        }
+      }
+      val ts = acc.keySet.toArray(new Array[String](0))
+      java.util.Arrays.sort(ts.asInstanceOf[Array[AnyRef]])
+      Iterator.single(TargetRun(ts, ts.map(acc.get(_)(0)), ts.map(acc.get(_)(1))))
+    }.treeAggregate(TargetRun(Array.empty, Array.empty, Array.empty))(
+      TargetRun.merge, TargetRun.merge, depth = 2)
+    val targets = perTarget.targets
+    val unique = perTarget.unique
     val n = targets.length
     val namesB = sc.broadcast(targets)
 
-    val compact = grouped.rdd.map { r =>
+    val compact = grouped.map { c =>
       val names = namesB.value.asInstanceOf[Array[AnyRef]]
-      val ms = r.getSeq[Row](1)
-      val m = ms.length
-      val ts = new Array[Int](m); val cs = new Array[Long](m)
-      val os = new Array[Long](m)
-      var i = 0
-      while (i < m) {
-        val e = ms(i)
-        ts(i) = java.util.Arrays.binarySearch(names, e.getString(0))
-        cs(i) = e.getLong(1); os(i) = e.getLong(2)
-        i += 1
-      }
-      Cands(r.getString(0), ts, cs, os)
+      val ts = c.names.map(t => java.util.Arrays.binarySearch(names, t))
+      Cands(c.readId, ts, c.cs, c.os)
     }.persist(StorageLevel.MEMORY_AND_DISK)
 
     def normalized(totals: Array[Double]): Array[Double] = {
@@ -182,7 +241,7 @@ object Em {
     compact.unpersist()
     if (pB != null) pB.destroy()
     namesB.destroy()
-    Run(one, targets, unique, perTarget.map(_._3), assigned)
+    Run(one, targets, unique, perTarget.matches, assigned)
   }
 
   /** EM `.one` plus the rewritten `.rep` (reference reassign.py:180-224:

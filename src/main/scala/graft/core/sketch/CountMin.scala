@@ -22,10 +22,7 @@ final class CountMin(val depth: Int, val width: Int, val counts: Array[Long],
 
   def total: Long = _total
 
-  @inline private def cell(row: Int, key: Long): Int = {
-    val h = Hashing.mix64(key ^ (0x9E3779B97F4A7C15L * (row + 1)))
-    row * width + ((h & Long.MaxValue) % width).toInt
-  }
+  @inline private def cell(row: Int, key: Long): Int = CountMin.cell(width, row, key)
 
   def add(key: Long, c: Long = 1L): Unit = {
     var r = 0
@@ -69,6 +66,12 @@ final class CountMin(val depth: Int, val width: Int, val counts: Array[Long],
 }
 
 object CountMin {
+  /** Flat index (row * width + column) of `key`'s counter in `row`. */
+  @inline def cell(width: Int, row: Int, key: Long): Int = {
+    val h = Hashing.mix64(key ^ (0x9E3779B97F4A7C15L * (row + 1)))
+    row * width + ((h & Long.MaxValue) % width).toInt
+  }
+
   def empty(depth: Int = 7, width: Int = 4096): CountMin =
     new CountMin(depth, width, new Array[Long](depth * width), 0L)
 

@@ -1,5 +1,7 @@
 package graft.core.sketch
 
+import graft.core.Hashing
+
 /**
  * Dense HyperLogLog over 64-bit hashes. Standard-error 1.04/sqrt(m),
  * m = 2^p registers (byte-per-register dense layout).
@@ -14,7 +16,14 @@ package graft.core.sketch
  * linear-counting fallback for the small range (Flajolet et al. 2007); with
  * 64-bit hashes no large-range correction is needed.
  *
- * Serialized layout: [p: Int][registers: Byte * 2^p].
+ * Register index and rank come from `mix64(hash)`, not the raw hash: the
+ * engine's inputs are minimizers (window minima), whose top bits are
+ * nearly always 0, so unmixed they pile into the first registers.
+ *
+ * Serialized layout: [Format << 24 | p: Int][registers: Byte * 2^p]. Format
+ * 0 (a bare p) was written before the hash was mixed; its registers mean
+ * something else, so [[Hll.fromBytes]] rejects it instead of letting it
+ * merge with format-1 registers.
  */
 final class Hll(val p: Int, val registers: Array[Byte]) extends Serializable {
   require(p >= 4 && p <= 18, s"p=$p out of [4,18]")
@@ -22,8 +31,9 @@ final class Hll(val p: Int, val registers: Array[Byte]) extends Serializable {
   require(registers.length == m)
 
   def add(hash: Long): Unit = {
-    val idx = (hash >>> (64 - p)).toInt
-    val w = hash << p
+    val x = Hashing.mix64(hash)
+    val idx = (x >>> (64 - p)).toInt
+    val w = x << p
     // rank = leading zeros of the remaining 64-p bits, +1; w==0 -> max rank
     val rank = if (w == 0L) (64 - p + 1) else java.lang.Long.numberOfLeadingZeros(w) + 1
     val r = math.min(rank, 64 - p + 1).toByte
@@ -73,19 +83,24 @@ final class Hll(val p: Int, val registers: Array[Byte]) extends Serializable {
 
   def toBytes: Array[Byte] = {
     val out = new Array[Byte](4 + m)
-    out(0) = (p >>> 24).toByte; out(1) = (p >>> 16).toByte
-    out(2) = (p >>> 8).toByte; out(3) = p.toByte
+    out(0) = Hll.Format; out(3) = p.toByte
     System.arraycopy(registers, 0, out, 4, m)
     out
   }
 }
 
 object Hll {
+  /** Serialized-layout version: 1 = registers of mixed hashes. */
+  val Format: Byte = 1
+
   def empty(p: Int = 14): Hll = new Hll(p, new Array[Byte](1 << p))
 
   def fromBytes(bytes: Array[Byte]): Hll = {
-    val p = ((bytes(0) & 0xFF) << 24) | ((bytes(1) & 0xFF) << 16) |
-      ((bytes(2) & 0xFF) << 8) | (bytes(3) & 0xFF)
+    require(bytes(0) == Format && bytes(1) == 0 && bytes(2) == 0,
+      s"HLL sketch of format ${bytes(0)} (expected $Format): it was written " +
+        "before register indices were taken from mixed hashes and cannot " +
+        "be merged with current sketches; rebuild it from its input")
+    val p = bytes(3) & 0xFF
     val m = 1 << p
     val regs = new Array[Byte](m)
     System.arraycopy(bytes, 4, regs, 0, m)

@@ -1,7 +1,5 @@
 package graft.core.sketch
 
-import scala.collection.mutable.ArrayBuffer
-
 /**
  * KLL-style mergeable quantile sketch over doubles (Karnin-Lall-Liberty
  * 2016 family): a ladder of compactors; level h items carry weight 2^h;
@@ -19,104 +17,133 @@ import scala.collection.mutable.ArrayBuffer
  * No analog in the reference; required by the north rule for file-size /
  * shingle-count quantile queries.
  *
+ * Levels are primitive `double[]` buffers with explicit lengths; the level
+ * capacities are recomputed only when the ladder grows a level, and the
+ * item count is kept as a running total, so `add` costs no `math.pow`.
+ *
  * Serialized layout: [k: Int][nLevels: Int][n: Long][flags: Long]
  * then per level [len: Int][items: Double*len].
  */
 final class Kll(val k: Int) extends Serializable {
   require(k >= 8)
-  private[sketch] var levels: ArrayBuffer[ArrayBuffer[Double]] =
-    ArrayBuffer(ArrayBuffer.empty[Double])
-  private[sketch] var alternate: Long = 0L // bit per level: keep odd vs even next time
-  private[sketch] var _n: Long = 0L
+  private var items: Array[Array[Double]] = Array(new Array[Double](8))
+  private var lens: Array[Int] = Array(0)
+  private var depth = 1
+  private var caps: Array[Int] = capacities(1)
+  private var capTotal: Int = caps.sum
+  private var size = 0 // items held, over all levels
+  private var alternate: Long = 0L // bit per level: keep odd vs even next time
+  private var _n: Long = 0L
 
   def n: Long = _n
 
-  private def capacity(level: Int): Int = {
-    val depth = levels.length
-    val h = depth - 1 - level // 0 for the top level
+  /** Level capacities of a `d`-level ladder: k * (2/3)^h at height h
+    * below the top, floor 2. */
+  private def capacities(d: Int): Array[Int] = Array.tabulate(d) { level =>
+    val h = d - 1 - level // 0 for the top level
     math.max(2, math.ceil(k * math.pow(2.0 / 3.0, h.toDouble)).toInt)
   }
 
+  private def setDepth(d: Int): Unit = {
+    if (d > items.length) {
+      items = java.util.Arrays.copyOf(items, math.max(d, items.length * 2))
+      lens = java.util.Arrays.copyOf(lens, items.length)
+    }
+    var l = depth
+    while (l < d) { items(l) = new Array[Double](8); lens(l) = 0; l += 1 }
+    depth = d
+    caps = capacities(d)
+    capTotal = caps.sum
+  }
+
+  private def append(l: Int, x: Double): Unit = {
+    if (lens(l) == items(l).length)
+      items(l) = java.util.Arrays.copyOf(items(l), items(l).length * 2)
+    items(l)(lens(l)) = x
+    lens(l) += 1
+  }
+
   def add(x: Double): Unit = {
-    levels(0) += x
+    append(0, x)
+    size += 1
     _n += 1
     compress()
   }
 
-  private def totalCapacity: Int = {
-    var s = 0; var l = 0
-    while (l < levels.length) { s += capacity(l); l += 1 }
-    s
-  }
-
-  private def size: Int = {
-    var s = 0; var l = 0
-    while (l < levels.length) { s += levels(l).length; l += 1 }
-    s
-  }
-
   private def compress(): Unit = {
-    while (size >= totalCapacity) {
+    while (size >= capTotal) {
       // compact the lowest level at/over its capacity
       var l = 0
-      while (l < levels.length && levels(l).length < capacity(l)) l += 1
-      if (l == levels.length) return
+      while (l < depth && lens(l) < caps(l)) l += 1
+      if (l == depth) return
       compactLevel(l)
     }
   }
 
   private def compactLevel(l: Int): Unit = {
-    if (l + 1 == levels.length) levels += ArrayBuffer.empty[Double]
-    val sorted = levels(l).sorted
+    if (l + 1 == depth) setDepth(depth + 1)
+    val buf = items(l)
+    val len = lens(l)
+    java.util.Arrays.sort(buf, 0, len)
     // weight conservation: only an even count can be halved-and-promoted;
     // an odd buffer leaves its last item behind at this level.
-    val odd = sorted.length % 2 == 1
-    val m = if (odd) sorted.length - 1 else sorted.length
+    val odd = len % 2 == 1
+    val m = if (odd) len - 1 else len
     val keepOdd = ((alternate >>> l) & 1L) == 1L
     alternate ^= (1L << l)
-    val start = if (keepOdd) 1 else 0
-    val up = levels(l + 1)
-    var i = start
-    while (i < m) { up += sorted(i); i += 2 }
-    levels(l) = if (odd) ArrayBuffer(sorted(m)) else ArrayBuffer.empty[Double]
+    var i = if (keepOdd) 1 else 0
+    while (i < m) { append(l + 1, buf(i)); i += 2 }
+    size -= m - m / 2
+    if (odd) buf(0) = buf(m)
+    lens(l) = if (odd) 1 else 0
   }
 
   def merge(other: Kll): Kll = {
     require(other.k == k, s"incompatible KLL k=$k vs ${other.k}")
-    while (levels.length < other.levels.length) levels += ArrayBuffer.empty[Double]
+    if (depth < other.depth) setDepth(other.depth)
     var l = 0
-    while (l < other.levels.length) { levels(l) ++= other.levels(l); l += 1 }
+    while (l < other.depth) {
+      var i = 0
+      while (i < other.lens(l)) { append(l, other.items(l)(i)); i += 1 }
+      size += other.lens(l)
+      l += 1
+    }
     _n += other._n
     compress()
     this
   }
 
-  /** All (value, weight) pairs, for rank/quantile evaluation. */
-  private def weighted: Array[(Double, Long)] = {
-    val out = ArrayBuffer.empty[(Double, Long)]
-    var l = 0
-    while (l < levels.length) {
-      val wgt = 1L << l
-      levels(l).foreach(v => out += ((v, wgt)))
-      l += 1
-    }
-    out.sortBy(_._1).toArray
-  }
-
-  /** Estimated value at rank fraction q in [0,1]. */
+  /** Estimated value at rank fraction q in [0,1]: a merge walk over the
+    * levels' sorted copies, accumulating each item's weight 2^level. */
   def quantile(q: Double): Double = {
     require(q >= 0.0 && q <= 1.0)
-    val w = weighted
-    if (w.isEmpty) return Double.NaN
+    if (size == 0) return Double.NaN
+    val sorted = Array.tabulate(depth) { l =>
+      val a = java.util.Arrays.copyOf(items(l), lens(l))
+      java.util.Arrays.sort(a)
+      a
+    }
+    val at = new Array[Int](depth)
     val target = q * _n
     var cum = 0L
-    var i = 0
-    while (i < w.length) {
-      cum += w(i)._2
-      if (cum >= target) return w(i)._1
-      i += 1
+    var last = Double.NaN
+    var left = size
+    while (left > 0) {
+      var best = -1
+      var l = 0
+      while (l < depth) {
+        if (at(l) < sorted(l).length &&
+            (best < 0 || java.lang.Double.compare(sorted(l)(at(l)),
+              sorted(best)(at(best))) < 0)) best = l
+        l += 1
+      }
+      last = sorted(best)(at(best))
+      at(best) += 1
+      cum += 1L << best
+      if (cum >= target) return last
+      left -= 1
     }
-    w.last._1
+    last
   }
 
   /** Estimated rank fraction of value x. */
@@ -124,9 +151,9 @@ final class Kll(val k: Int) extends Serializable {
     if (_n == 0) return Double.NaN
     var below = 0L
     var l = 0
-    while (l < levels.length) {
-      val wgt = 1L << l
-      levels(l).foreach(v => if (v <= x) below += wgt)
+    while (l < depth) {
+      var i = 0
+      while (i < lens(l)) { if (items(l)(i) <= x) below += 1L << l; i += 1 }
       l += 1
     }
     below.toDouble / _n
@@ -136,13 +163,15 @@ final class Kll(val k: Int) extends Serializable {
   def rankErrorBound: Double = math.min(0.5, 1.65 * 2.3 / k)
 
   def toBytes: Array[Byte] = {
-    var sz = 4 + 4 + 8 + 8
-    levels.foreach(b => sz += 4 + b.length * 8)
-    val bb = java.nio.ByteBuffer.allocate(sz).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(k).putInt(levels.length).putLong(_n).putLong(alternate)
-    levels.foreach { b =>
-      bb.putInt(b.length)
-      b.foreach(bb.putDouble)
+    val bb = java.nio.ByteBuffer.allocate(4 + 4 + 8 + 8 + 4 * depth + 8 * size)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.putInt(k).putInt(depth).putLong(_n).putLong(alternate)
+    var l = 0
+    while (l < depth) {
+      bb.putInt(lens(l))
+      var i = 0
+      while (i < lens(l)) { bb.putDouble(items(l)(i)); i += 1 }
+      l += 1
     }
     bb.array()
   }
@@ -156,12 +185,13 @@ object Kll {
     val k = bb.getInt(); val nLevels = bb.getInt()
     val sk = new Kll(k)
     val n = bb.getLong(); val alt = bb.getLong()
-    sk.levels = ArrayBuffer.fill(nLevels)(ArrayBuffer.empty[Double])
+    sk.setDepth(nLevels)
     var l = 0
     while (l < nLevels) {
       val len = bb.getInt()
       var i = 0
-      while (i < len) { sk.levels(l) += bb.getDouble(); i += 1 }
+      while (i < len) { sk.append(l, bb.getDouble()); i += 1 }
+      sk.size += len
       l += 1
     }
     sk.alternate = alt

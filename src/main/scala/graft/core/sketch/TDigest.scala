@@ -155,17 +155,22 @@ object TDigest {
   def empty(compression: Double = 100.0): TDigest =
     new TDigest(compression, new Array[Double](0), new Array[Double](0), 0, 0.0)
 
+  /** The digest exactly as serialized: its centroids are restored as
+    * centroids, not replayed through the merge sweep, so a round trip
+    * (a partial aggregate crossing the exchange) changes nothing. */
   def fromBytes(bytes: Array[Byte]): TDigest = {
     val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     val comp = bb.getDouble(); bb.getLong(); val k = bb.getInt()
-    val td = empty(comp)
+    val means = new Array[Double](k)
+    val weights = new Array[Double](k)
+    var total = 0.0
     var i = 0
     while (i < k) {
-      val m = bb.getDouble(); val w = bb.getDouble()
-      td.add(m, w)
+      means(i) = bb.getDouble(); weights(i) = bb.getDouble()
+      total += weights(i)
       i += 1
     }
-    td
+    new TDigest(comp, means, weights, k, total)
   }
 
   /** Practical rank-error envelope for the k0 sweep at this compression —

@@ -4,11 +4,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.schema.MessageTypeParser
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
 /**
  * Driver-direct parquet I/O for the store's CONTROL PLANE (bins + manifest,
@@ -92,11 +93,23 @@ private[graft] object ParquetMeta {
       .sortBy(_.getName.toString).toSeq
   }
 
-  private def readGroups(conf: Configuration, path: Path): Vector[Group] = {
+  /** Every row at `path`; with `column`, rows of that one column only,
+    * projected as each file typed it (legacy writers' nullability and
+    * list field names included), so no other column is read. */
+  private def readGroups(conf: Configuration, path: Path,
+      column: Option[String] = None): Vector[Group] = {
     val out = Vector.newBuilder[Group]
     partFiles(conf, path).foreach { f =>
+      val c = column.fold(conf) { name =>
+        val fr = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        val schema = try fr.getFooter.getFileMetaData.getSchema finally fr.close()
+        val projected = new Configuration(conf)
+        projected.set(ReadSupport.PARQUET_READ_SCHEMA,
+          new MessageType(schema.getName, schema.getType(Seq(name): _*)).toString)
+        projected
+      }
       val r = org.apache.parquet.hadoop.ParquetReader
-        .builder(new GroupReadSupport(), f).withConf(conf).build()
+        .builder(new GroupReadSupport(), f).withConf(c).build()
       try {
         var g = r.read()
         while (g != null) { out += g; g = r.read() }
@@ -158,19 +171,7 @@ private[graft] object ParquetMeta {
   /** The one manifest row at `path`: a file, or a legacy directory whose
     * part-files hold exactly one row in total (empty parts are fine). */
   def readManifestRow(conf: Configuration, path: Path): ManifestRow = {
-    val gs = readGroups(conf, path)
-    require(gs.length == 1,
-      s"manifest at $path holds ${gs.length} rows, expected exactly 1")
-    val g = gs.head
-    // index-based list access tolerates legacy writers' inner field names
-    val sgIdx = g.getType.getFieldIndex("shard_gens")
-    val shardGens =
-      if (g.getFieldRepetitionCount(sgIdx) == 0) Array.empty[Int]
-      else {
-        val sg = g.getGroup(sgIdx, 0)
-        Array.tabulate(sg.getFieldRepetitionCount(0))(i =>
-          sg.getGroup(0, i).getInteger(0, 0))
-      }
+    val g = oneRow(path, readGroups(conf, path))
     ManifestRow(
       g.getInteger("version", 0), g.getInteger("generation", 0),
       g.getString("layout", 0), g.getInteger("k", 0), g.getInteger("w", 0),
@@ -178,7 +179,29 @@ private[graft] object ParquetMeta {
       g.getInteger("hll_p", 0), g.getInteger("min_content_len", 0),
       g.getString("sizing_mode", 0), g.getLong("bits_per_bin", 0),
       g.getInteger("num_hashes", 0), g.getLong("max_hashes_bin", 0),
-      g.getInteger("num_bins", 0), shardGens,
+      g.getInteger("num_bins", 0), shardGensOf(g),
       g.getBinary("ibf", 0).getBytes)
+  }
+
+  /** Only the `shard_gens` of the one manifest row at `path` — all that gc
+    * needs; the filter blob beside it is never read. */
+  def readShardGens(conf: Configuration, path: Path): Array[Int] =
+    shardGensOf(oneRow(path, readGroups(conf, path, Some("shard_gens"))))
+
+  private def oneRow(path: Path, gs: Vector[Group]): Group = {
+    require(gs.length == 1,
+      s"manifest at $path holds ${gs.length} rows, expected exactly 1")
+    gs.head
+  }
+
+  private def shardGensOf(g: Group): Array[Int] = {
+    // index-based list access tolerates legacy writers' inner field names
+    val sgIdx = g.getType.getFieldIndex("shard_gens")
+    if (g.getFieldRepetitionCount(sgIdx) == 0) Array.empty[Int]
+    else {
+      val sg = g.getGroup(sgIdx, 0)
+      Array.tabulate(sg.getFieldRepetitionCount(0))(i =>
+        sg.getGroup(0, i).getInteger(0, 0))
+    }
   }
 }

@@ -718,7 +718,7 @@ object SketchStore {
     val needed = ((oldest to cur) ++ pinnedOld).flatMap { v =>
       val mp = new Path(s"${genDir(dir, v)}/manifest.parquet")
       if (!fs.exists(mp)) Nil
-      else ParquetMeta.readManifestRow(conf, mp).shardGens
+      else ParquetMeta.readShardGens(conf, mp)
         .zipWithIndex.map { case (gv, g) => (gv, g) }
     }.toSet
     var files = 0L

@@ -1,8 +1,12 @@
 package graft.report
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.spark.Rows
 
 /**
  * Hierarchical tree report (`.tre` capability of ganon report,
@@ -10,35 +14,92 @@ import org.apache.spark.sql.functions._
  * percentages, count/percentile filters, deterministic sort.
  *
  * The cumulative tree sum (report.py:656-667 walks each target's lineage
- * to the root) is the idiomatic Spark tree rollup: explode(lineage) then
- * groupBy(ancestor) — one shuffle over |nodes| keys.
+ * to the root) runs on the driver: its inputs, the per-node counts and the
+ * lineage, are |nodes| rows that a broadcast join would ship to the driver
+ * anyway, and its output is |nodes| rows.
  */
 object Report {
+
+  private val TreeSchema = StructType(Seq(
+    StructField("node", StringType), StructField("rank_depth", IntegerType),
+    StructField("direct", LongType), StructField("cumulative", LongType),
+    StructField("cum_perc", DoubleType)))
+
+  /** One tree node's sums; a null sum has seen no non-null count, as in SQL. */
+  private final class NodeSums(var depth: Int) {
+    var direct: java.lang.Long = null
+    var cumulative: java.lang.Long = null
+  }
+
+  private def plus(a: java.lang.Long, b: java.lang.Long): java.lang.Long =
+    if (a == null) b else if (b == null) a else java.lang.Long.valueOf(a + b)
 
   /**
    * @param counts   (node, direct_count) — e.g. per-target read counts
    * @param lineage  (node, lineage: Array[String]) root-first, inclusive
-   * @return (node, rank_depth, direct, cumulative, cum_perc); `cum_perc`
-   *         is over every counts row, those without a lineage included
+   * @return (node, rank_depth, direct, cumulative, cum_perc), sorted by
+   *         (rank_depth, cumulative desc, node); a node's `rank_depth` is
+   *         its lineage position and `cum_perc` is over every counts row,
+   *         those without a lineage included. Built from the collected
+   *         inputs: the returned DataFrame is local.
    */
   def tree(counts: DataFrame, lineage: DataFrame): DataFrame = {
-    // one aggregation: each counts row meets every ancestor; its own
-    // (last) lineage entry carries `direct`, and a row with no lineage
-    // survives posexplode_outer as a null ancestor that only feeds the total
-    val self = col("pos").isNull || col("pos") === size(col("lineage")) - 1
-    counts.join(broadcast(lineage), Seq("node"), "left")
-      .select(col("direct_count"), col("lineage"),
-        posexplode_outer(col("lineage")).as(Seq("pos", "anc")))
-      .groupBy(col("anc").as("node"))
-      .agg(min(col("pos")).as("rank_depth"),
-        sum(when(self, col("direct_count")).otherwise(0L)).as("direct"),
-        sum(col("direct_count")).as("cumulative"))
-      // |nodes| rows: the total is a sum over all of them, lineage-less
-      // group included; floored at 1 so an all-zero total divides cleanly
-      .withColumn("cum_perc", round(col("cumulative") /
-        greatest(sum(col("direct")).over(), lit(1L)) * 100.0, 5))
-      .filter(col("node").isNotNull)
-      .orderBy(col("rank_depth").asc, col("cumulative").desc, col("node").asc)
+    val spark = counts.sparkSession
+    val lineages = Rows.collect(lineage.select(col("node").cast("string"),
+        col("lineage").cast("array<string>"))) { r =>
+      val node = if (r.isNullAt(0)) null else r.getUTF8String(0).toString
+      val lin = if (r.isNullAt(1)) Array.empty[String] else {
+        val a = r.getArray(1)
+        Array.tabulate(a.numElements())(i =>
+          if (a.isNullAt(i)) null else a.getUTF8String(i).toString)
+      }
+      (node, lin)
+    }.filter(_._1 != null).groupMap(_._1)(_._2)
+    val sums = scala.collection.mutable.HashMap.empty[String, NodeSums]
+    // each counts row meets every ancestor in each of its lineages; its own
+    // (last) entry carries `direct`. A row with no lineage (or an empty
+    // one) feeds only the total, through the lineage-less null group.
+    var total: java.lang.Long = null
+    Rows.collect(counts.select(col("node").cast("string"),
+        col("direct_count").cast("long"))) { r =>
+      (if (r.isNullAt(0)) null else r.getUTF8String(0).toString,
+        if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1)))
+    }.foreach { case (node, dc) =>
+      val lins = Option(node).flatMap(lineages.get)
+        .getOrElse(Array(Array.empty[String]))
+      lins.foreach { lin =>
+        if (lin.isEmpty) total = plus(total, dc)
+        else lin.zipWithIndex.foreach { case (anc, pos) =>
+          val self = pos == lin.length - 1
+          val d: java.lang.Long = if (self) dc else java.lang.Long.valueOf(0L)
+          if (anc == null) total = plus(total, d)
+          else {
+            val s = sums.getOrElseUpdate(anc, new NodeSums(pos))
+            s.depth = math.min(s.depth, pos)
+            s.direct = plus(s.direct, d)
+            s.cumulative = plus(s.cumulative, dc)
+          }
+        }
+      }
+    }
+    sums.valuesIterator.foreach(s => total = plus(total, s.direct))
+    // floored at 1 so an all-zero total divides cleanly
+    val denom = if (total == null) 1.0 else math.max(total.longValue, 1L).toDouble
+    val rows = sums.toSeq.map { case (node, s) =>
+      val perc =
+        if (s.cumulative == null) null
+        else java.lang.Double.valueOf(java.math.BigDecimal
+          .valueOf(s.cumulative.longValue / denom * 100.0)
+          .setScale(5, java.math.RoundingMode.HALF_UP).doubleValue)
+      (UTF8String.fromString(node), Row(node, s.depth, s.direct, s.cumulative, perc))
+    }.sortWith { case ((na, a), (nb, b)) =>
+      val da = a.getInt(1); val db = b.getInt(1)
+      if (da != db) da < db
+      else if (a.isNullAt(3) != b.isNullAt(3)) b.isNullAt(3) // nulls last
+      else if (!a.isNullAt(3) && a.getLong(3) != b.getLong(3)) a.getLong(3) > b.getLong(3)
+      else na.compareTo(nb) < 0
+    }.map(_._2)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), TreeSchema)
   }
 
   /**

@@ -1,10 +1,11 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumnBridge => ExpressionUtils, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.UserDefinedFunction
 
 import graft.core.{Hashing, MinHash, SimHash}
+import graft.spark.udaf.{SketchAgg, SketchOp}
 import graft.spark.udaf.SketchAggs._
 
 /**
@@ -78,44 +79,45 @@ object GraftFunctions {
 
   // ---- sketch aggregations ---------------------------------------------
 
+  private def sketch(op: SketchOp[_], cols: Column*): Column =
+    ExpressionUtils.column(
+      SketchAgg.of(op, cols.map(ExpressionUtils.expression)).toAggregateExpression())
+
   def hllCount(hashes: Column, p: Int = 14): Column =
-    udaf(new HllCountAgg(p)).apply(hashes)
+    sketch(HllOp(p, bytes = false), hashes)
 
   def hllSketch(hashes: Column, p: Int = 14): Column =
-    udaf(new HllSketchAgg(p)).apply(hashes)
+    sketch(HllOp(p, bytes = true), hashes)
 
   def bloomSketch(hashes: Column, numBits: Long, numHashes: Int): Column =
-    udaf(new BloomSketchAgg(numBits, numHashes)).apply(hashes)
+    sketch(BloomOp(numBits, numHashes), hashes)
 
   /** One 64-bin interleaved shard of the sketch db (executor-side IBF
-    * assembly) — see [[graft.spark.udaf.SketchAggs.IbfShardAgg]]. */
+    * assembly) — see [[graft.spark.udaf.SketchAggs.IbfShardOp]]. */
   def ibfShard(grp: Column, base: Column, split: Column, hashes: Column,
-      bitsPerBin: Long, numHashes: Int): Column = {
-    val agg = new IbfShardAgg(bitsPerBin, numHashes)
-    udaf(agg, agg.inputEncoder).apply(grp, base, split, hashes)
-  }
+      bitsPerBin: Long, numHashes: Int): Column =
+    sketch(IbfShardOp(bitsPerBin, numHashes), grp, base, split, hashes)
 
   /** Band-cap primitive: k smallest ids per group + dropped count
     * (struct<ids: array<bigint>, dropped: bigint>) — see
-    * [[graft.spark.udaf.SketchAggs.MinKIdsAgg]]. */
-  def minKIds(id: Column, k: Int): Column =
-    udaf(new MinKIdsAgg(k)).apply(id)
+    * [[graft.spark.udaf.SketchAggs.MinKIdsOp]]. */
+  def minKIds(id: Column, k: Int): Column = sketch(MinKIdsOp(k), id)
 
   def cmsSketch(hashes: Column, depth: Int = 7, width: Int = 8192): Column =
-    udaf(new CmsSketchAgg(depth, width)).apply(hashes)
+    sketch(CmsOp(depth, width), hashes)
 
   def kllSketch(value: Column, k: Int = 256): Column =
-    udaf(new KllSketchAgg(k)).apply(value)
+    sketch(KllOp(k, None), value)
 
   def kllQuantiles(value: Column, qs: Array[Double], k: Int = 256): Column =
-    udaf(new KllQuantilesAgg(k, qs)).apply(value)
+    sketch(KllOp(k, Some(qs.toIndexedSeq)), value)
 
   def tdigestSketch(value: Column, compression: Double = 100.0): Column =
-    udaf(new TDigestSketchAgg(compression)).apply(value)
+    sketch(TDigestOp(compression, None), value)
 
   def tdigestQuantiles(value: Column, qs: Array[Double],
       compression: Double = 100.0): Column =
-    udaf(new TDigestQuantilesAgg(compression, qs)).apply(value)
+    sketch(TDigestOp(compression, Some(qs.toIndexedSeq)), value)
 
   // ---- SQL registration --------------------------------------------------
 
@@ -180,14 +182,14 @@ object GraftFunctions {
     spark.udf.register("graft_band_keys",
       udf((s: Array[Long], bands: Int) =>
         if (s == null) Array.empty[Long] else MinHash.bandKeys(s, bands)))
-    spark.udf.register("graft_hll_count", udaf(new HllCountAgg(14)))
-    spark.udf.register("graft_hll_sketch", udaf(new HllSketchAgg(14)))
-    spark.udf.register("graft_cms_sketch", udaf(new CmsSketchAgg(7, 8192)))
-    spark.udf.register("graft_kll_sketch", udaf(new KllSketchAgg(256)))
-    // UDAF registration fixes constructor params at registration time, so
-    // the SQL surface carries the library default cap (10000); a different
-    // maxBucket needs the Scala API (GraftFunctions.minKIds(col, k)) or a
-    // re-registration under another name
-    spark.udf.register("graft_min_k_ids", udaf(new MinKIdsAgg(10000)))
+    // the SQL surface carries the library defaults (HLL p = 14, CMS 7 x
+    // 8192, KLL k = 256, min-k cap 10000); other parameters need the Scala
+    // API (e.g. GraftFunctions.minKIds(col, k))
+    Seq[SketchOp[_]](HllOp(14, bytes = false), HllOp(14, bytes = true), CmsOp(7, 8192),
+        KllOp(256, None), MinKIdsOp(10000)).foreach { op =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(op.name,
+        es => SketchAgg.of(op, es),
+        "scala_udf")
+    }
   }
 }

@@ -1,102 +1,195 @@
 package graft.spark.udaf
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import java.nio.{ByteBuffer, ByteOrder}
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types._
 
 import graft.build.BinLayout
 import graft.core.sketch.{Bloom, CountMin, Hll, InterleavedBloom, Kll, TDigest}
 
 /**
- * Mergeable sketches as typed Catalyst Aggregators (the north rule's core):
- * partial sketch per partition (map-side), associative `merge` in reduce —
- * the same two-phase algebra the reference applies to its thread-local maps
- * (ganon: src/ganon-classify/GanonClassify.cpp:475-490) and to IBF bin
- * insertion (src/ganon-build/GanonBuild.cpp:655-698, merge == bitwise OR).
- *
- * All buffers are Kryo-encoded objects → Spark plans ObjectHashAggregate:
- * buffers live as JVM objects during partial aggregation; serialization
- * happens only at the exchange.
- *
- * Inputs are `Array[Long]` hash sets (one row's distinct shingles/tokens),
- * so no explode() shuffle-amplification ever happens: the per-row array is
- * folded straight into the sketch buffer.
+ * One mergeable sketch as an aggregate: the six functions of a two-phase
+ * aggregation (zero, update, merge, serialize, deserialize, eval) plus its
+ * input and result types. [[SketchAgg]] runs it inside Catalyst.
  */
-object SketchAggs {
+abstract class SketchOp[T] extends Serializable {
+  /** SQL name of the aggregate (also its name in plans). */
+  def name: String
+  /** Types the children are cast to (a no-op cast is optimized away). */
+  def inputTypes: Seq[DataType]
+  def dataType: DataType
+  def zero(): T
+  /** Folds one non-null input in: the child's Catalyst value, or for an op
+    * over several columns a row of the children's values. */
+  def update(buf: T, in: Any): T
+  def merge(buf: T, other: T): T
+  def eval(buf: T): Any
+  /** The partial state as it crosses the exchange: the sketch's own
+    * compact bytes. */
+  def serialize(buf: T): Array[Byte]
+  def deserialize(bytes: Array[Byte]): T
+}
 
-  /** HLL distinct count of all hashes across rows -> estimate. */
-  class HllCountAgg(p: Int) extends Aggregator[Array[Long], Hll, Long] {
-    def zero: Hll = Hll.empty(p)
-    def reduce(b: Hll, a: Array[Long]): Hll = { if (a != null) b.addAll(a); b }
-    def merge(x: Hll, y: Hll): Hll = x.merge(y)
-    def finish(b: Hll): Long = b.estimate
-    def bufferEncoder: Encoder[Hll] = Encoders.kryo[Hll]
-    def outputEncoder: Encoder[Long] = Encoders.scalaLong
+/**
+ * Mergeable sketches as Catalyst aggregates (the north rule's core): a
+ * partial sketch per partition (map-side), an associative `merge` in the
+ * reduce — the same two-phase algebra the reference applies to its
+ * thread-local maps (ganon: src/ganon-classify/GanonClassify.cpp:475-490)
+ * and to IBF bin insertion (src/ganon-build/GanonBuild.cpp:655-698, merge
+ * == bitwise OR).
+ *
+ * A `TypedImperativeAggregate`, so Spark plans ObjectHashAggregate: the
+ * buffer lives as a JVM object during partial aggregation and is turned
+ * into bytes only at the exchange, by [[SketchOp.serialize]]. Input is read
+ * straight from the bound child values (`ArrayData` for hash arrays), with
+ * no encoder round trip and no generated encoder projections. Null inputs
+ * are skipped. Build one with [[SketchAgg.of]], which casts the children
+ * to the op's input types.
+ *
+ * Inputs of the hash sketches are `array<bigint>` hash sets (one row's
+ * distinct shingles/tokens), so no explode() shuffle-amplification ever
+ * happens: the per-row array is folded straight into the sketch buffer.
+ */
+case class SketchAgg[T](op: SketchOp[T], children: Seq[Expression],
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[T] {
+
+  override def dataType: DataType = op.dataType
+  override def nullable: Boolean = true
+  override def prettyName: String = op.name
+
+  @transient private lazy val args = new GenericInternalRow(children.length)
+
+  override def createAggregationBuffer(): T = op.zero()
+
+  override def update(buf: T, input: InternalRow): T = {
+    val v =
+      if (children.length == 1) children.head.eval(input)
+      else {
+        var i = 0
+        while (i < children.length) { args.update(i, children(i).eval(input)); i += 1 }
+        args
+      }
+    if (v == null) buf else op.update(buf, v)
   }
 
-  /** HLL, returning the serialized mergeable sketch itself. */
-  class HllSketchAgg(p: Int) extends Aggregator[Array[Long], Hll, Array[Byte]] {
-    def zero: Hll = Hll.empty(p)
-    def reduce(b: Hll, a: Array[Long]): Hll = { if (a != null) b.addAll(a); b }
-    def merge(x: Hll, y: Hll): Hll = x.merge(y)
-    def finish(b: Hll): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[Hll] = Encoders.kryo[Hll]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  override def merge(buf: T, other: T): T = op.merge(buf, other)
+  override def eval(buf: T): Any = op.eval(buf)
+  override def serialize(buf: T): Array[Byte] = op.serialize(buf)
+  override def deserialize(bytes: Array[Byte]): T = op.deserialize(bytes)
+
+  override def withNewMutableAggBufferOffset(o: Int): SketchAgg[T] =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): SketchAgg[T] =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): SketchAgg[T] = copy(children = newChildren)
+}
+
+object SketchAgg {
+  def of[T](op: SketchOp[T], children: Seq[Expression]): SketchAgg[T] = {
+    require(children.length == op.inputTypes.length,
+      s"${op.name} takes ${op.inputTypes.length} argument(s), got ${children.length}")
+    SketchAgg(op, children.zip(op.inputTypes).map { case (e, t) => Cast(e, t) })
+  }
+}
+
+object SketchAggs {
+  private val Hashes: Seq[DataType] = Seq(ArrayType(LongType))
+  private val Doubles = ArrayType(DoubleType, containsNull = false)
+
+  private def le(n: Int): ByteBuffer = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
+  private def le(b: Array[Byte]): ByteBuffer = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
+
+  /** HLL over hash arrays: the distinct-count estimate, or with `bytes`
+    * the serialized mergeable sketch itself. */
+  final case class HllOp(p: Int, bytes: Boolean) extends SketchOp[Hll] {
+    def name: String = if (bytes) "graft_hll_sketch" else "graft_hll_count"
+    def inputTypes: Seq[DataType] = Hashes
+    def dataType: DataType = if (bytes) BinaryType else LongType
+    def zero(): Hll = Hll.empty(p)
+    def update(b: Hll, in: Any): Hll = {
+      val a = in.asInstanceOf[ArrayData]
+      var i = 0
+      while (i < a.numElements()) { b.add(a.getLong(i)); i += 1 }
+      b
+    }
+    def merge(b: Hll, o: Hll): Hll = b.merge(o)
+    def eval(b: Hll): Any = if (bytes) b.toBytes else b.estimate
+    def serialize(b: Hll): Array[Byte] = b.toBytes
+    def deserialize(x: Array[Byte]): Hll = Hll.fromBytes(x)
   }
 
   /** Per-group Bloom filter (one bin of the IBF), fixed (numBits, numHashes). */
-  class BloomSketchAgg(numBits: Long, numHashes: Int)
-      extends Aggregator[Array[Long], Bloom, Array[Byte]] {
-    def zero: Bloom = Bloom.empty(numBits, numHashes)
-    def reduce(b: Bloom, a: Array[Long]): Bloom = { if (a != null) b.addAll(a); b }
-    def merge(x: Bloom, y: Bloom): Bloom = x.merge(y)
-    def finish(b: Bloom): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[Bloom] = Encoders.kryo[Bloom]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  final case class BloomOp(numBits: Long, numHashes: Int) extends SketchOp[Bloom] {
+    def name: String = "graft_bloom_sketch"
+    def inputTypes: Seq[DataType] = Hashes
+    def dataType: DataType = BinaryType
+    def zero(): Bloom = Bloom.empty(numBits, numHashes)
+    def update(b: Bloom, in: Any): Bloom = {
+      val a = in.asInstanceOf[ArrayData]
+      var i = 0
+      while (i < a.numElements()) { b.add(a.getLong(i)); i += 1 }
+      b
+    }
+    def merge(b: Bloom, o: Bloom): Bloom = b.merge(o)
+    def eval(b: Bloom): Any = b.toBytes
+    def serialize(b: Bloom): Array[Byte] = b.toBytes
+    def deserialize(x: Array[Byte]): Bloom = Bloom.fromBytes(x)
   }
 
-  /** One input slice for the shard builder: a row's hash subset destined
-    * for 64-bin group `grp`, owned by the target at bins
-    * [base, base+split). */
-  final case class ShardSlice(grp: Int, base: Int, split: Int, hs: Array[Long])
-
-  /** Mutable shard buffer: a 64-bin-wide interleaved Bloom column (one
-    * word per hash position). grp = -1 until the first input lands. */
-  final class ShardBuf(var grp: Int, val shard: InterleavedBloom)
-      extends Serializable
+  /** Shard buffer: one 64-bin-wide interleaved Bloom column (one word per
+    * hash position), allocated with the first non-empty input; grp = -1
+    * until then. */
+  final class ShardBuf(var grp: Int, var shard: InterleavedBloom)
 
   /**
    * Builds ONE 64-bin group of the final interleaved filter directly in
    * its probe layout (no transpose step, no per-bin Bloom blobs): the
    * executor-side assembly of the reference's IBF insert pass
    * (GanonBuild.cpp:655-698), with hash->technical-bin routing replacing
-   * the index-range bin map (:619-653). merge == bitwise OR.
+   * the index-range bin map (:619-653). merge == bitwise OR. Input is
+   * (grp, base, split, hs): a row's hash subset destined for 64-bin group
+   * `grp`, owned by the target at bins [base, base+split).
    */
-  class IbfShardAgg(bitsPerBin: Long, numHashes: Int)
-      extends Aggregator[ShardSlice, ShardBuf, Array[Byte]] {
-    def zero: ShardBuf =
-      new ShardBuf(-1, InterleavedBloom.empty(64, bitsPerBin, numHashes))
-    def reduce(b: ShardBuf, in: ShardSlice): ShardBuf = {
+  final case class IbfShardOp(bitsPerBin: Long, numHashes: Int)
+      extends SketchOp[ShardBuf] {
+    def name: String = "graft_ibf_shard"
+    def inputTypes: Seq[DataType] =
+      Seq(IntegerType, IntegerType, IntegerType, ArrayType(LongType))
+    def dataType: DataType = BinaryType
+    def zero(): ShardBuf = new ShardBuf(-1, null)
+    def update(b: ShardBuf, in: Any): ShardBuf = {
       // empty slices leave grp at -1: a group fed ONLY empty hash sets
       // finishes as null and its row is dropped post-agg — the same
       // "untouched group" semantics the routing explode used to enforce
       // row-side (the split-free fast path no longer filters rows, which
       // would push a shingle-expression predicate through the projection
       // and re-evaluate the kernel per row)
-      if (in != null && in.hs != null && in.hs.length > 0) {
-        if (b.grp == -1) b.grp = in.grp
-        val off = in.grp * 64
+      val row = in.asInstanceOf[InternalRow]
+      val hs = if (row.isNullAt(3)) null else row.getArray(3)
+      if (hs != null && hs.numElements() > 0) {
+        val grp = row.getInt(0); val base = row.getInt(1); val split = row.getInt(2)
+        if (b.grp == -1) {
+          b.grp = grp
+          b.shard = InterleavedBloom.empty(64, bitsPerBin, numHashes)
+        }
+        val off = grp * 64
         var i = 0
-        while (i < in.hs.length) {
-          val h = in.hs(i)
-          val local = in.base + BinLayout.routeBin(h, in.split) - off
+        while (i < hs.numElements()) {
+          val h = hs.getLong(i)
+          val local = base + BinLayout.routeBin(h, split) - off
           if (local >= 0 && local < 64) b.shard.add(h, local)
           i += 1
         }
       }
       b
     }
-    def merge(x: ShardBuf, y: ShardBuf): ShardBuf = {
+    def merge(x: ShardBuf, y: ShardBuf): ShardBuf =
       if (x.grp == -1) y
       else if (y.grp == -1) x
       else {
@@ -105,22 +198,24 @@ object SketchAggs {
         while (i < xw.length) { xw(i) |= yw(i); i += 1 }
         x
       }
-    }
-    def finish(b: ShardBuf): Array[Byte] =
-      if (b.grp == -1) null else b.shard.toBytes
-    def bufferEncoder: Encoder[ShardBuf] = Encoders.kryo[ShardBuf]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    def inputEncoder: Encoder[ShardSlice] = ExpressionEncoder[ShardSlice]()
+    def eval(b: ShardBuf): Any = if (b.grp == -1) null else b.shard.toBytes
+    /** [grp: Int][shard bytes], or no bytes for an untouched group. */
+    def serialize(b: ShardBuf): Array[Byte] =
+      if (b.grp == -1) Array.emptyByteArray
+      else {
+        val s = b.shard.toBytes
+        le(4 + s.length).putInt(b.grp).put(s).array()
+      }
+    def deserialize(x: Array[Byte]): ShardBuf =
+      if (x.isEmpty) zero()
+      else new ShardBuf(le(x).getInt(),
+        InterleavedBloom.fromBytes(java.util.Arrays.copyOfRange(x, 4, x.length)))
   }
-
-  /** Result of the band-cap aggregation: the group's k smallest ids plus
-    * how many members were dropped (observable truncation). */
-  final case class MinKIds(ids: Array[Long], dropped: Long)
 
   /** Bounded max-heap buffer holding the k smallest values seen. Grows
     * geometrically to k, so sub-cap groups (the common case) never pay the
     * full-cap allocation during partial aggregation. */
-  final class MinKBuf(val k: Int) extends Serializable {
+  final class MinKBuf(val k: Int) {
     var n = 0
     var dropped = 0L
     var heap: Array[Long] = Array.emptyLongArray
@@ -162,87 +257,232 @@ object SketchAggs {
       this
     }
 
-    def result(): MinKIds = {
+    /** The kept ids, ascending. */
+    def ids: Array[Long] = {
       val out = java.util.Arrays.copyOf(heap, n)
       java.util.Arrays.sort(out)
-      MinKIds(out, dropped)
+      out
     }
   }
 
   /**
    * "k smallest ids per group + dropped count" — the LSH band-cap
-   * primitive. Replaces a per-band `row_number()` window (a full sort
-   * exchange) with ONE partially-aggregated shuffle: a mega-bucket ships
-   * at most k ids per map partition instead of its whole membership, and
-   * truncation is an observable VALUE instead of a silent rank filter.
-   * Keeps exactly the ids `row_number().orderBy(id) <= k` kept, so cap
-   * semantics (and the J=1 identical-signature recall argument) carry over.
+   * primitive, as struct<ids: array<bigint>, dropped: bigint>. Replaces a
+   * per-band `row_number()` window (a full sort exchange) with ONE
+   * partially-aggregated shuffle: a mega-bucket ships at most k ids per
+   * map partition instead of its whole membership, and truncation is an
+   * observable VALUE instead of a silent rank filter. Keeps exactly the
+   * ids `row_number().orderBy(id) <= k` kept, so cap semantics (and the
+   * J=1 identical-signature recall argument) carry over.
    */
-  class MinKIdsAgg(k: Int) extends Aggregator[Long, MinKBuf, MinKIds] {
-    def zero: MinKBuf = new MinKBuf(k)
-    def reduce(b: MinKBuf, a: Long): MinKBuf = { b.add(a); b }
-    def merge(x: MinKBuf, y: MinKBuf): MinKBuf = x.mergeFrom(y)
-    def finish(b: MinKBuf): MinKIds = b.result()
-    def bufferEncoder: Encoder[MinKBuf] = Encoders.kryo[MinKBuf]
-    def outputEncoder: Encoder[MinKIds] = ExpressionEncoder[MinKIds]()
-  }
-
-  /** Count-min over hash multisets (each array element counts once). */
-  class CmsSketchAgg(depth: Int, width: Int)
-      extends Aggregator[Array[Long], CountMin, Array[Byte]] {
-    def zero: CountMin = CountMin.empty(depth, width)
-    def reduce(b: CountMin, a: Array[Long]): CountMin = {
-      if (a != null) { var i = 0; while (i < a.length) { b.add(a(i)); i += 1 } }
+  final case class MinKIdsOp(k: Int) extends SketchOp[MinKBuf] {
+    def name: String = "graft_min_k_ids"
+    def inputTypes: Seq[DataType] = Seq(LongType)
+    def dataType: DataType = StructType(Seq(
+      StructField("ids", ArrayType(LongType, containsNull = false)),
+      StructField("dropped", LongType, nullable = false)))
+    def zero(): MinKBuf = new MinKBuf(k)
+    def update(b: MinKBuf, in: Any): MinKBuf = { b.add(in.asInstanceOf[Long]); b }
+    def merge(b: MinKBuf, o: MinKBuf): MinKBuf = b.mergeFrom(o)
+    def eval(b: MinKBuf): Any =
+      InternalRow(UnsafeArrayData.fromPrimitiveArray(b.ids), b.dropped)
+    /** [n: Int][dropped: Long][heap: Long * n], heap order kept. */
+    def serialize(b: MinKBuf): Array[Byte] = {
+      val bb = le(12 + 8 * b.n).putInt(b.n).putLong(b.dropped)
+      var i = 0
+      while (i < b.n) { bb.putLong(b.heap(i)); i += 1 }
+      bb.array()
+    }
+    def deserialize(x: Array[Byte]): MinKBuf = {
+      val bb = le(x)
+      val b = new MinKBuf(k)
+      b.n = bb.getInt(); b.dropped = bb.getLong()
+      b.heap = new Array[Long](b.n)
+      var i = 0
+      while (i < b.n) { b.heap(i) = bb.getLong(); i += 1 }
       b
     }
-    def merge(x: CountMin, y: CountMin): CountMin = x.merge(y)
-    def finish(b: CountMin): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[CountMin] = Encoders.kryo[CountMin]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** KLL quantile sketch over a double column -> serialized sketch. */
-  class KllSketchAgg(k: Int) extends Aggregator[Double, Kll, Array[Byte]] {
-    def zero: Kll = Kll.empty(k)
-    def reduce(b: Kll, a: Double): Kll = { b.add(a); b }
-    def merge(x: Kll, y: Kll): Kll = x.merge(y)
-    def finish(b: Kll): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[Kll] = Encoders.kryo[Kll]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  /**
+   * Count-min partial state: a sparse cell -> count map (open addressing,
+   * slot key cell + 1) until it holds an eighth of the cells, then the
+   * dense counter array. A per-repo partial typically touches a few
+   * thousand of its depth x width cells, so it neither allocates nor ships
+   * the dense array.
+   */
+  final class CmsBuf(val depth: Int, val width: Int) {
+    private val cells = depth * width
+    private val maxSparse = math.max(16, cells / 8)
+    var total = 0L
+    var dense: Array[Long] = null
+    private var keys = new Array[Int](32)
+    private var vals = new Array[Long](32)
+    private var used = 0
+
+    def nonZero: Int =
+      if (dense == null) used
+      else { var c = 0; var i = 0; while (i < cells) { if (dense(i) != 0L) c += 1; i += 1 }; c }
+
+    def addKey(key: Long): Unit = {
+      var r = 0
+      while (r < depth) { add(CountMin.cell(width, r, key), 1L); r += 1 }
+      total += 1
+    }
+
+    def add(cell: Int, c: Long): Unit =
+      if (dense != null) dense(cell) += c
+      else {
+        val mask = keys.length - 1
+        var i = (cell * 0x9E3779B9) >>> 7 & mask
+        while (keys(i) != 0 && keys(i) != cell + 1) i = (i + 1) & mask
+        if (keys(i) == 0) {
+          keys(i) = cell + 1
+          used += 1
+        }
+        vals(i) += c
+        if (used > maxSparse) promote()
+        else if (2 * used > keys.length) rehash(keys.length * 2)
+      }
+
+    /** Every (cell, count) of the sparse map. */
+    private def foreachSparse(f: (Int, Long) => Unit): Unit = {
+      var i = 0
+      while (i < keys.length) { if (keys(i) != 0) f(keys(i) - 1, vals(i)); i += 1 }
+    }
+
+    private def rehash(cap: Int): Unit = {
+      val (ok, ov) = (keys, vals)
+      keys = new Array[Int](cap); vals = new Array[Long](cap); used = 0
+      var i = 0
+      while (i < ok.length) { if (ok(i) != 0) add(ok(i) - 1, ov(i)); i += 1 }
+    }
+
+    private def promote(): Unit = {
+      val d = new Array[Long](cells)
+      foreachSparse((c, v) => d(c) += v)
+      adopt(d)
+    }
+
+    private def adopt(d: Array[Long]): Unit = { dense = d; keys = null; vals = null; used = 0 }
+
+    def merge(o: CmsBuf): CmsBuf = {
+      require(o.depth == depth && o.width == width,
+        s"incompatible CMS ($depth,$width) vs (${o.depth},${o.width})")
+      total += o.total
+      if (o.dense == null) o.foreachSparse(add)
+      else if (dense != null) {
+        var i = 0
+        while (i < cells) { dense(i) += o.dense(i); i += 1 }
+      } else {
+        // take over the other side's dense array, fold our cells into it
+        val (k0, v0) = (keys, vals)
+        adopt(o.dense)
+        var i = 0
+        while (i < k0.length) { if (k0(i) != 0) dense(k0(i) - 1) += v0(i); i += 1 }
+      }
+      this
+    }
+
+    def toCountMin: CountMin = {
+      if (dense == null) promote()
+      new CountMin(depth, width, dense, total)
+    }
+
+    /** [depth: Int][width: Int][total: Long][nnz: Int] then nnz
+      * (cell: Int, count: Long) pairs — or nnz = -1 and the dense counters
+      * when those are smaller. */
+    def toBytes: Array[Byte] = {
+      val nnz = nonZero
+      if (12L * nnz >= 8L * cells) {
+        val bb = le(20 + 8 * cells).putInt(depth).putInt(width).putLong(total).putInt(-1)
+        var i = 0
+        while (i < cells) { bb.putLong(dense(i)); i += 1 }
+        bb.array()
+      } else {
+        val bb = le(20 + 12 * nnz).putInt(depth).putInt(width).putLong(total).putInt(nnz)
+        if (dense == null) foreachSparse((c, v) => bb.putInt(c).putLong(v))
+        else {
+          var i = 0
+          while (i < cells) { if (dense(i) != 0L) bb.putInt(i).putLong(dense(i)); i += 1 }
+        }
+        bb.array()
+      }
+    }
   }
 
-  /** t-digest quantile sketch over a double column -> serialized sketch. */
-  class TDigestSketchAgg(compression: Double)
-      extends Aggregator[Double, TDigest, Array[Byte]] {
-    def zero: TDigest = TDigest.empty(compression)
-    def reduce(b: TDigest, a: Double): TDigest = { b.add(a); b }
-    def merge(x: TDigest, y: TDigest): TDigest = x.merge(y)
-    def finish(b: TDigest): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[TDigest] = Encoders.kryo[TDigest]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  object CmsBuf {
+    def fromBytes(x: Array[Byte]): CmsBuf = {
+      val bb = le(x)
+      val b = new CmsBuf(bb.getInt(), bb.getInt())
+      b.total = bb.getLong()
+      val nnz = bb.getInt()
+      if (nnz < 0) {
+        val d = new Array[Long](b.depth * b.width)
+        var i = 0
+        while (i < d.length) { d(i) = bb.getLong(); i += 1 }
+        b.adopt(d)
+      } else {
+        var i = 0
+        while (i < nnz) { b.add(bb.getInt(), bb.getLong()); i += 1 }
+      }
+      b
+    }
   }
 
-  /** t-digest -> quantile values at the requested ranks. */
-  class TDigestQuantilesAgg(compression: Double, qs: Array[Double])
-      extends Aggregator[Double, TDigest, Array[Double]] {
-    def zero: TDigest = TDigest.empty(compression)
-    def reduce(b: TDigest, a: Double): TDigest = { b.add(a); b }
-    def merge(x: TDigest, y: TDigest): TDigest = x.merge(y)
-    def finish(b: TDigest): Array[Double] = qs.map(b.quantile)
-    def bufferEncoder: Encoder[TDigest] = Encoders.kryo[TDigest]
-    def outputEncoder: Encoder[Array[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
+  /** Count-min over hash multisets (each array element counts once) ->
+    * the serialized [[CountMin]]. */
+  final case class CmsOp(depth: Int, width: Int) extends SketchOp[CmsBuf] {
+    def name: String = "graft_cms_sketch"
+    def inputTypes: Seq[DataType] = Hashes
+    def dataType: DataType = BinaryType
+    def zero(): CmsBuf = new CmsBuf(depth, width)
+    def update(b: CmsBuf, in: Any): CmsBuf = {
+      val a = in.asInstanceOf[ArrayData]
+      var i = 0
+      while (i < a.numElements()) { b.addKey(a.getLong(i)); i += 1 }
+      b
+    }
+    def merge(b: CmsBuf, o: CmsBuf): CmsBuf = b.merge(o)
+    def eval(b: CmsBuf): Any = b.toCountMin.toBytes
+    def serialize(b: CmsBuf): Array[Byte] = b.toBytes
+    def deserialize(x: Array[Byte]): CmsBuf = CmsBuf.fromBytes(x)
   }
 
-  /** KLL -> quantile values at the requested ranks, in one aggregation. */
-  class KllQuantilesAgg(k: Int, qs: Array[Double])
-      extends Aggregator[Double, Kll, Array[Double]] {
-    def zero: Kll = Kll.empty(k)
-    def reduce(b: Kll, a: Double): Kll = { b.add(a); b }
-    def merge(x: Kll, y: Kll): Kll = x.merge(y)
-    def finish(b: Kll): Array[Double] = qs.map(b.quantile)
-    def bufferEncoder: Encoder[Kll] = Encoders.kryo[Kll]
-    def outputEncoder: Encoder[Array[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
+  /** KLL over a double column -> the serialized sketch, or with
+    * `quantiles` the values at those ranks. */
+  final case class KllOp(k: Int, quantiles: Option[IndexedSeq[Double]])
+      extends SketchOp[Kll] {
+    def name: String = if (quantiles.isEmpty) "graft_kll_sketch" else "graft_kll_quantiles"
+    def inputTypes: Seq[DataType] = Seq(DoubleType)
+    def dataType: DataType = if (quantiles.isEmpty) BinaryType else Doubles
+    def zero(): Kll = Kll.empty(k)
+    def update(b: Kll, in: Any): Kll = { b.add(in.asInstanceOf[Double]); b }
+    def merge(b: Kll, o: Kll): Kll = b.merge(o)
+    def eval(b: Kll): Any = quantiles match {
+      case None => b.toBytes
+      case Some(qs) => UnsafeArrayData.fromPrimitiveArray(qs.map(b.quantile).toArray)
+    }
+    def serialize(b: Kll): Array[Byte] = b.toBytes
+    def deserialize(x: Array[Byte]): Kll = Kll.fromBytes(x)
+  }
+
+  /** t-digest over a double column -> the serialized sketch, or with
+    * `quantiles` the values at those ranks. */
+  final case class TDigestOp(compression: Double, quantiles: Option[IndexedSeq[Double]])
+      extends SketchOp[TDigest] {
+    def name: String =
+      if (quantiles.isEmpty) "graft_tdigest_sketch" else "graft_tdigest_quantiles"
+    def inputTypes: Seq[DataType] = Seq(DoubleType)
+    def dataType: DataType = if (quantiles.isEmpty) BinaryType else Doubles
+    def zero(): TDigest = TDigest.empty(compression)
+    def update(b: TDigest, in: Any): TDigest = { b.add(in.asInstanceOf[Double]); b }
+    def merge(b: TDigest, o: TDigest): TDigest = b.merge(o)
+    def eval(b: TDigest): Any = quantiles match {
+      case None => b.toBytes
+      case Some(qs) => UnsafeArrayData.fromPrimitiveArray(qs.map(b.quantile).toArray)
+    }
+    def serialize(b: TDigest): Array[Byte] = b.toBytes
+    def deserialize(x: Array[Byte]): TDigest = TDigest.fromBytes(x)
   }
 }

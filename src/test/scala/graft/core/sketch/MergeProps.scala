@@ -99,11 +99,13 @@ object MergeProps extends Properties("sketch-merge") {
 
   property("minK: split-invariant merge == single-pass k-smallest + dropped") =
     forAll(genSplit, Gen.chooseNum(1, 64)) { case ((xs, chunks), k) =>
-      import graft.spark.udaf.SketchAggs.MinKIdsAgg
-      val agg = new MinKIdsAgg(k)
-      val bulk = agg.finish(xs.foldLeft(agg.zero)(agg.reduce))
-      val parts = chunks.map(c => c.foldLeft(agg.zero)(agg.reduce))
-      val merged = agg.finish(parts.reverse.foldLeft(agg.zero)(agg.merge))
+      import graft.spark.udaf.SketchAggs.{MinKBuf, MinKIdsOp}
+      val op = MinKIdsOp(k)
+      def fold(c: Array[Long]) = c.foldLeft(op.zero())((b, v) => op.update(b, v))
+      val bulk = fold(xs)
+      // partials cross a serialize/deserialize round trip, as at the exchange
+      val parts = chunks.map(c => op.deserialize(op.serialize(fold(c))))
+      val merged = parts.reverse.foldLeft(op.zero())(op.merge)
       val expect = xs.distinct.sorted.take(k) // ids are distinct by construction
       Prop(merged.ids.sameElements(bulk.ids) &&
         bulk.ids.sameElements(expect.take(bulk.ids.length)) &&
@@ -116,20 +118,61 @@ object MergeProps extends Properties("sketch-merge") {
   property("ibf shard: split-invariant OR-merge == bulk insert, routed bins") =
     forAll(genSplit, Gen.chooseNum(1, 5)) { case ((xs, chunks), split) =>
       import graft.build.BinLayout
-      import graft.spark.udaf.SketchAggs.{IbfShardAgg, ShardSlice}
-      val agg = new IbfShardAgg(4096, 3)
+      import graft.spark.udaf.SketchAggs.IbfShardOp
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      val op = IbfShardOp(4096, 3)
+      def slice(c: Array[Long]) =
+        op.update(op.zero(), InternalRow(0, 2, split, UnsafeArrayData.fromPrimitiveArray(c)))
       // bulk: everything through one buffer
-      val bulk = agg.reduce(agg.zero, ShardSlice(0, 2, split, xs))
-      // split: one buffer per chunk, merged in arbitrary (reversed) order
-      val parts = chunks.map(c => agg.reduce(agg.zero, ShardSlice(0, 2, split, c)))
-      val merged = parts.reverse.foldLeft(agg.zero)(agg.merge)
-      val same = java.util.Arrays.equals(bulk.shard.words, merged.shard.words)
+      val bulk = slice(xs)
+      // split: one buffer per chunk, each through a serialize/deserialize
+      // round trip, merged in arbitrary (reversed) order
+      val parts = chunks.map(c => op.deserialize(op.serialize(slice(c))))
+      val merged = parts.reverse.foldLeft(op.zero())(op.merge)
+      val same = xs.isEmpty && merged.grp == -1 && bulk.grp == -1 ||
+        java.util.Arrays.equals(bulk.shard.words, merged.shard.words)
       // every hash routed in [2, 2+split) and present in its bin
       val routedOk = xs.forall { h =>
         val bin = 2 + BinLayout.routeBin(h, split)
-        merged.grp == -1 && xs.isEmpty ||
-          merged.shard.bulkCount(Array(h)).apply(bin) >= 1
+        merged.shard.bulkCount(Array(h)).apply(bin) >= 1
       }
       Prop(same && (xs.isEmpty || routedOk)) :| s"n=${xs.length} split=$split"
+    }
+
+  property("cms partial: sparse and dense partials round-trip; merge == bulk") =
+    forAll(genSplit) { case (xs, chunks) =>
+      import graft.spark.udaf.SketchAggs.{CmsBuf, CmsOp}
+      import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      // 4 x 64 cells: a partial goes dense past 32 touched cells, so both
+      // forms (and the promotion) cross the exchange
+      val op = CmsOp(4, 64)
+      val parts = chunks.map(c => op.update(op.zero(), UnsafeArrayData.fromPrimitiveArray(c)))
+      val wire = parts.map(op.serialize)
+      val sparseOk = parts.zip(wire).forall { case (b, w) =>
+        b.dense != null || w.length == 20 + 12 * b.nonZero }
+      val merged = wire.map(op.deserialize).foldLeft(op.zero())(op.merge)
+      val bulk = CountMin.empty(4, 64); xs.foreach(bulk.add(_))
+      Prop(sparseOk && merged.toCountMin.toBytes.sameElements(bulk.toBytes)) :|
+        s"n=${xs.length} dense=${parts.count(_.dense != null)}/${parts.length}"
+    }
+
+  property("sketch partials survive serialize/deserialize unchanged") =
+    forAll(genHashes) { xs =>
+      import graft.spark.udaf.SketchAggs._
+      import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      val in = UnsafeArrayData.fromPrimitiveArray(xs)
+      val ds = xs.map(h => (h >>> 11).toDouble)
+      def rt[T](op: graft.spark.udaf.SketchOp[T], b: T): T = op.deserialize(op.serialize(b))
+      val hll = HllOp(10, bytes = true); val h = hll.update(hll.zero(), in)
+      val bloom = BloomOp(4096, 3); val bl = bloom.update(bloom.zero(), in)
+      val kll = KllOp(32, None); val k = ds.foldLeft(kll.zero())(kll.update)
+      val tdo = TDigestOp(20.0, None); val t = ds.foldLeft(tdo.zero())(tdo.update)
+      val mk = MinKIdsOp(16); val m = xs.foldLeft(mk.zero())((b, v) => mk.update(b, v))
+      Prop(rt(hll, h).registers.sameElements(h.registers) &&
+        rt(bloom, bl).words.sameElements(bl.words) &&
+        rt(kll, k).toBytes.sameElements(k.toBytes) &&
+        rt(tdo, t).toBytes.sameElements(t.toBytes) &&
+        rt(mk, m).ids.sameElements(m.ids) && rt(mk, m).dropped == m.dropped)
     }
 }

@@ -121,6 +121,17 @@ class SketchSpec extends AnyFunSuite {
     h.addAll(hs); assert(h.estimate == e1)
   }
 
+  test("hll: registers come from mixed hashes; pre-mix bytes are rejected") {
+    // minimizer-like input: small values whose top bits are all 0
+    val h = Hll.empty(12)
+    (1L to 20000L).foreach(v => h.add(v * 7919L))
+    assert(math.abs(h.estimate - 20000L) / 20000.0 <= 3 * h.stdError)
+    val old = h.toBytes.clone()
+    old(0) = 0 // format 0: a bare p, written before the hash was mixed
+    val e = intercept[IllegalArgumentException](Hll.fromBytes(old))
+    assert(e.getMessage.contains("format 0"))
+  }
+
   test("hll: serde roundtrip") {
     val h = Hll.empty(10)
     h.addAll(hashes(500, 6))

@@ -114,4 +114,23 @@ class ParquetMetaSpec extends AnyFunSuite {
       ParquetMeta.readManifestRow(conf, new Path(s"$dir/two.parquet")))
     assert(two.getMessage.contains("holds 2 rows"))
   }
+
+  test("gc's shard_gens read touches no other manifest column") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_pm").toString
+    val p = new Path(s"$dir/manifest.parquet")
+    ParquetMeta.writeManifestRow(conf, p, row.copy(ibf = new Array[Byte](1 << 20)))
+    assert(ParquetMeta.readShardGens(conf, p).toSeq == row.shardGens.toSeq)
+    // legacy directory-shaped, spark-written (nullable fields)
+    legacyManifest(1).coalesce(1).write.parquet(s"$dir/legacy.parquet")
+    assert(ParquetMeta.readShardGens(conf, new Path(s"$dir/legacy.parquet"))
+      .toSeq == row.shardGens.toSeq)
+    // a file holding ONLY shard_gens: the full row read fails on the
+    // missing columns, the gc read does not look for them
+    Seq(row.shardGens).toDF("shard_gens")
+      .coalesce(1).write.parquet(s"$dir/only.parquet")
+    val only = new Path(s"$dir/only.parquet")
+    assert(ParquetMeta.readShardGens(conf, only).toSeq == row.shardGens.toSeq)
+    intercept[Exception](ParquetMeta.readManifestRow(conf, only))
+  }
 }

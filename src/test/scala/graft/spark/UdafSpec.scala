@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Hashing
-import graft.core.sketch.{CountMin, Hll, Kll}
+import graft.core.sketch.{CountMin, Hll, Kll, TDigest}
 
 /**
  * Exact-oracle equivalence of the sketch UDAFs inside real Spark plans,
@@ -196,5 +196,71 @@ class UdafSpec extends AnyFunSuite {
     val d = spark.sql("select graft_token_hashes(text) from t_reg2").first()
     assert(a.getAs[scala.collection.Seq[Long]](1) !=
       d.getAs[scala.collection.Seq[Long]](0))
+  }
+
+  /** `chunks` as a DataFrame whose partitions are exactly the chunks, rows
+    * in chunk order. */
+  private def partitioned[T: scala.reflect.ClassTag](chunks: Seq[Seq[T]]) =
+    spark.sparkContext.parallelize(chunks, chunks.length).flatMap(identity)
+
+  private def randomChunks[T](rnd: scala.util.Random, xs: Seq[T]): Seq[Seq[T]] = {
+    val cuts = Seq.fill(rnd.nextInt(8))(rnd.nextInt(xs.length + 1))
+    val points = (0 +: cuts.sorted :+ xs.length).distinct
+    points.zip(points.tail).map { case (a, b) => xs.slice(a, b) }
+  }
+
+  test("sketch aggregates equal the core sketches on random inputs and partitionings") {
+    val rnd = new scala.util.Random(20261018L)
+    (1 to 3).foreach { trial =>
+      // count-min and HLL merge order-free: groups spread over partitions
+      val rows = Seq.fill(200 + rnd.nextInt(400))(
+        (rnd.nextInt(4), Array.fill(1 + rnd.nextInt(40))(rnd.nextLong() % 3000)))
+      val df = partitioned(randomChunks(rnd, rows)).toDF("g", "hs")
+      val got = df.groupBy("g").agg(GraftFunctions.cmsSketch($"hs", 5, 1024),
+          GraftFunctions.hllCount($"hs", 12))
+        .collect().map(r => r.getInt(0) -> (r.getAs[Array[Byte]](1), r.getLong(2))).toMap
+      rows.groupBy(_._1).foreach { case (g, rs) =>
+        val cms = CountMin.empty(5, 1024)
+        val hll = Hll.empty(12)
+        rs.foreach { case (_, hs) => hs.foreach(cms.add(_)); hll.addAll(hs) }
+        assert(got(g)._1.sameElements(cms.toBytes), s"trial $trial group $g: cms bytes")
+        assert(got(g)._2 == hll.estimate, s"trial $trial group $g: hll estimate")
+      }
+      // KLL and t-digest merge order matters: one group per partition, so
+      // the result is the empty final buffer merged with that partial
+      val chunks = randomChunks(rnd, Seq.fill(2000 + rnd.nextInt(3000))(
+        math.floor(rnd.nextGaussian() * 1000) / 10)).filter(_.nonEmpty)
+      val qs = Array(0.1, 0.5, 0.99)
+      val q = partitioned(chunks.zipWithIndex.map { case (c, i) => c.map(v => (i, v)) })
+        .toDF("g", "v").groupBy("g")
+        .agg(GraftFunctions.kllSketch($"v", 64), GraftFunctions.tdigestQuantiles($"v", qs, 50.0))
+        .collect().map(r => r.getInt(0) ->
+          (r.getAs[Array[Byte]](1), r.getSeq[Double](2))).toMap
+      chunks.zipWithIndex.foreach { case (c, i) =>
+        val kll = Kll.empty(64); c.foreach(kll.add)
+        val td = TDigest.empty(50.0); c.foreach(td.add(_))
+        val tdFinal = TDigest.empty(50.0).merge(td)
+        assert(q(i)._1.sameElements(Kll.empty(64).merge(kll).toBytes),
+          s"trial $trial partition $i: kll bytes")
+        assert(q(i)._2 == qs.toSeq.map(tdFinal.quantile), s"trial $trial partition $i: t-digest")
+      }
+    }
+  }
+
+  test("sketch aggregates keep their SQL names") {
+    GraftFunctions.register(spark)
+    (0 until 50).map(i => (i.toLong, Array(Hashing.hashLong(i % 20L)), i * 0.5))
+      .toDF("id", "hs", "v").createOrReplaceTempView("t_sk")
+    val r = spark.sql(
+      """select graft_hll_count(hs), graft_hll_sketch(hs), graft_cms_sketch(hs),
+        |  graft_kll_sketch(v), graft_min_k_ids(id) from t_sk""".stripMargin).head()
+    assert(r.getLong(0) == 20L)
+    assert(Hll.fromBytes(r.getAs[Array[Byte]](1)).estimate == 20L)
+    val cms = CountMin.fromBytes(r.getAs[Array[Byte]](2))
+    assert(cms.total == 50L && cms.estimate(Hashing.hashLong(3L)) >= 3L)
+    assert(Kll.fromBytes(r.getAs[Array[Byte]](3)).n == 50L)
+    val mk = r.getStruct(4)
+    assert(mk.getSeq[Long](0) == (0L until 50L) && mk.getLong(1) == 0L)
+    intercept[Exception](spark.sql("select graft_hll_count(hs, 3) from t_sk").collect())
   }
 }
